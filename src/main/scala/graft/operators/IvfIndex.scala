@@ -31,27 +31,6 @@ import graft.functions.SketchExpressions
   */
 object IvfIndex {
 
-  /** Run `f` with AQE disabled, restoring the previous value after —
-    * the Warehouse bounded-metadata pattern: the index maintenance
-    * paths' touched-cell/survivor-cell collects are bounded O(cells)-
-    * row aggregations, and AQE materializes each of their exchanges
-    * as its OWN Spark job (~0.1-0.2 s scheduling floor apiece) with
-    * nothing to re-plan at these sizes. Result-identical by
-    * construction: exact distinct/aggregation collects whose physical
-    * shape is all AQE could change. */
-  private def withAqeOff[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    if (prev.contains("false")) f
-    else {
-      spark.conf.set(key, "false")
-      try f finally prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   /** Driver-local Lloyd's k-means over a sample: k-means++ style
     * seeding (deterministic, seeded) then at most `iters` sweeps,
     * stopping early when assignments stabilize. Returns `k` centroids

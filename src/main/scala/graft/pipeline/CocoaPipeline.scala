@@ -30,8 +30,7 @@ object CocoaPipeline {
     * two write jobs as `observe` metrics instead of re-scanning:
     * reporting costs zero extra jobs at any scale. */
   def runBatch(spark: SparkSession, dirs: Dirs,
-      processedAt: Timestamp = new Timestamp(System.currentTimeMillis()),
-      broadcastMergeKeys: Boolean = true): BatchResult = {
+      processedAt: Timestamp = new Timestamp(System.currentTimeMillis())): BatchResult = {
 
     val (maybeDf, disc) = Ingest.ingest(spark, dirs.landing)
     if (maybeDf.isEmpty)
@@ -61,7 +60,7 @@ object CocoaPipeline {
     val target = Warehouse.read(spark, dirs.warehouse)
     // The merged frame is consumed exactly once (the snapshot write),
     // so its observe node fires once and counts the committed rows.
-    val merged = Merge.upsertShipments(target, staged, broadcastMergeKeys)
+    val merged = Merge.upsertShipments(target, staged)
       .observe(mergedObs, count(lit(1)).as("rows"))
     val version = Warehouse.commit(spark, dirs.warehouse, merged)
 

@@ -76,18 +76,14 @@ object Merge {
     * Update columns align to the target's schema by name — missing
     * (pre-evolution) columns null-fill, extras drop ([[alignTo]]).
     *
-    * `broadcastKeys = true` (default) broadcasts the deduped update
-    * KEY SET into the anti join — the expected plan for the
-    * batch-vs-warehouse asymmetry (a daily batch's key set is MBs
-    * while the target is the 100 TB side; the big side then streams
-    * with no shuffle). Pass false when a replayed mega-batch could
-    * blow the driver's broadcast limit and let AQE decide instead. */
+    * The deduped update KEY SET is broadcast into the anti join — the
+    * expected plan for the batch-vs-warehouse asymmetry (a daily
+    * batch's key set is MBs while the target is the 100 TB side; the
+    * big side then streams with no shuffle). */
   def upsert(target: DataFrame, updates: DataFrame, key: String, ord: Column,
-      tieBreakers: Seq[Column] = Seq.empty,
-      broadcastKeys: Boolean = true): DataFrame = {
+      tieBreakers: Seq[Column] = Seq.empty): DataFrame = {
     val deduped = lastWriterWins(updates, key, ord, tieBreakers)
-    val keys = deduped.select(col(key))
-    target.join(if (broadcastKeys) broadcast(keys) else keys, Seq(key), "left_anti")
+    target.join(broadcast(deduped.select(col(key))), Seq(key), "left_anti")
       .unionByName(alignTo(deduped, target.schema))
   }
 
@@ -163,14 +159,10 @@ object Merge {
   }
 
   /** The cocoa-specific instantiation: key = shipment_id, recency =
-    * processed_at, deterministic tie-break on the event timestamp.
-    * `broadcastKeys` reaches every pipeline entry (batch runBatch,
-    * streaming foreachBatch) so a replay job feeding mega-batches can
-    * opt out of the key-set broadcast and let AQE plan the anti join. */
-  def upsertShipments(target: DataFrame, updates: DataFrame,
-      broadcastKeys: Boolean = true): DataFrame =
+    * processed_at, deterministic tie-break on the event timestamp. */
+  def upsertShipments(target: DataFrame, updates: DataFrame): DataFrame =
     upsert(target, updates, CocoaSchema.mergeKey,
-      col("processed_at"), Seq(col("timestamp")), broadcastKeys = broadcastKeys)
+      col("processed_at"), Seq(col("timestamp")))
 
   /** SLOWLY-CHANGING-DIMENSION TYPE 2 merge — the history-preserving
     * alternative to [[upsert]]'s last-writer-wins: instead of

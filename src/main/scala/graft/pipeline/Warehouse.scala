@@ -521,9 +521,8 @@ object Warehouse {
     * as everywhere. */
   private def manifestFrame(spark: SparkSession, root: String, v: Long,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val fs = Ingest.fs(spark, root)
-    entriesFrame(spark, root, dataFileEntries(spark, root, v), schema,
-      manifestParts(fs, root, v), dataFileStats(spark, root, v))
+    val h = head(spark, root, v)
+    entriesFrame(spark, h, h.files, schema, withStats = true)
   }
 
   /** A SUBSET of manifest version `v`'s files (root-relative paths) as
@@ -535,27 +534,25 @@ object Warehouse {
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val fs = Ingest.fs(spark, root)
     val abs = relPaths.map(r => fs.makeQualified(new Path(root, r)).toString)
-    entriesFrame(spark, root,
-      dataFileEntries(spark, root, v).filter(e => abs(e._1)),
-      schema, manifestParts(fs, root, v))
+    val h = head(spark, root, v)
+    entriesFrame(spark, h, h.files.filter(e => abs(e.path)), schema)
   }
 
-  /** Index-backed frame over an explicit manifest entry SUBSET — the
-    * building block behind [[manifestFrame]] and the file-granular DML
+  /** Index-backed frame over a SUBSET of `h`'s files — the building
+    * block behind [[manifestFrame]] and the file-granular DML
     * planning/rewrite reads: partition columns served from the path
-    * fragments, persisted stats pruning at planning, zero listing.
-    * `withFilePath = true` additionally surfaces
-    * `_metadata.file_path` as `__file` (projected directly above the
-    * relation, where metadata columns are guaranteed resolvable). */
-  private def entriesFrame(spark: SparkSession, root: String,
-      entries: Seq[(String, Long, Long)],
+    * fragments, zero listing, and with `withStats` the persisted stats
+    * prune files at planning. `withFilePath = true` additionally
+    * surfaces `_metadata.file_path` as `__file` (projected directly
+    * above the relation, where metadata columns are guaranteed
+    * resolvable). */
+  private def entriesFrame(spark: SparkSession, h: Head, files: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType,
-      partCols: Seq[String],
-      stats: Map[String, Map[String, (Option[Any], Option[Any])]] = Map.empty,
+      withStats: Boolean = false,
       withFilePath: Boolean = false,
       withPos: Boolean = false): DataFrame = {
     import org.apache.spark.sql.functions.col
-    if (entries.isEmpty) {
+    if (files.isEmpty) {
       var empty = org.apache.spark.sql.types.StructType(schema.fields)
       if (withFilePath) empty = empty.add("__file",
         org.apache.spark.sql.types.StringType)
@@ -564,13 +561,15 @@ object Warehouse {
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], empty)
     }
-    val parts = partCols.filter(schema.fieldNames.contains)
+    val parts = h.parts.filter(schema.fieldNames.contains)
     val partSchema = org.apache.spark.sql.types.StructType(
       parts.map(p => schema.fields(schema.fieldIndex(p))))
     val dataSchema = org.apache.spark.sql.types.StructType(
       schema.fields.filterNot(f => parts.contains(f.name)))
-    val idx = new graft.sources.v2.ManifestFileIndex(spark, root, entries,
-      stats, partSchema)
+    val idx = new graft.sources.v2.ManifestFileIndex(spark, h.root,
+      files.map(e => (e.path, e.size, e.mtime)),
+      if (withStats) dataFileStats(spark, h.root, h.version) else Map.empty,
+      partSchema)
     val base = org.apache.spark.sql.graftbridge.Bridge
       .ofFileIndex(spark, idx, dataSchema, partSchema)
     val cols = schema.fieldNames.toSeq.map(n => col(s"`$n`")) ++
@@ -590,8 +589,8 @@ object Warehouse {
       v: Long, schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.functions._
     val fs = Ingest.fs(spark, root)
-    val base = entriesFrame(spark, root, dataFileEntries(spark, root, v),
-      schema, manifestParts(fs, root, v), dataFileStats(spark, root, v),
+    val h = head(spark, root, v)
+    val base = entriesFrame(spark, h, h.files, schema, withStats = true,
       withFilePath = true, withPos = true)
     // same last-occurrence fence as [[snapshotWithPos]], on the ROOT
     // dir segment: only a real directory boundary can produce it
@@ -992,15 +991,8 @@ object Warehouse {
     val fs = Ingest.fs(spark, root)
     manifestOf(fs, root, v) match {
       case Some(lines) => lines.map { line =>
-        line.split("\t", 4) match {
-          case Array(rel, size, mtime, _*) if size.nonEmpty =>
-            (fs.makeQualified(new Path(root, rel)).toString,
-              size.toLong, mtime.toLong)
-          case Array(rel) =>
-            val st = fs.getFileStatus(new Path(root, rel))
-            (fs.makeQualified(st.getPath).toString,
-              st.getLen, st.getModificationTime)
-        }
+        val e = manifestEntry(fs, root, line)
+        (e.path, e.size, e.mtime)
       }
       case None =>
         // recursive + hidden-aware: a hive-partitioned plain version
@@ -1011,6 +1003,78 @@ object Warehouse {
             s.getLen, s.getModificationTime))
     }
   }
+
+  /** One data file of a resolved version: its filesystem-qualified
+    * path, persisted size and mtime, and the manifest line that
+    * carries it into the next version VERBATIM (persisted sizes and
+    * data-skipping stats survive every carry). */
+  private final case class FileEntry(path: String, size: Long, mtime: Long,
+      line: String)
+
+  /** One manifest line parsed; legacy lines without the size columns
+    * cost one stat. */
+  private def manifestEntry(fs: FileSystem, root: String,
+      line: String): FileEntry =
+    line.split("\t", 4) match {
+      case Array(rel, size, mtime, _*) if size.nonEmpty =>
+        FileEntry(fs.makeQualified(new Path(root, rel)).toString,
+          size.toLong, mtime.toLong, line)
+      case Array(rel) =>
+        val st = fs.getFileStatus(new Path(root, rel))
+        FileEntry(fs.makeQualified(st.getPath).toString,
+          st.getLen, st.getModificationTime, line)
+    }
+
+  /** A version resolved ONCE for a manifest read or commit: its
+    * PHYSICAL effective schema, carried rename map (physical →
+    * logical) and inverse, hive partition columns, and data files. */
+  private final case class Head(root: String, version: Long,
+      schema: org.apache.spark.sql.types.StructType,
+      p2l: Map[String, String], parts: Seq[String], files: Seq[FileEntry]) {
+    val l2p: Map[String, String] = p2l.map(_.swap)
+    /** `s` (physical names) under this version's logical names. */
+    def logical(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
+      org.apache.spark.sql.types.StructType(
+        s.fields.map(f => f.copy(name = p2l.getOrElse(f.name, f.name))))
+  }
+
+  private def head(spark: SparkSession, root: String, v: Long): Head = {
+    val fs = Ingest.fs(spark, root)
+    val files = manifestOf(fs, root, v) match {
+      case Some(lines) => lines.map(manifestEntry(fs, root, _))
+      // a plain version (the zero-copy conversion INTO manifest mode):
+      // lines synthesized from its one listing, no stats — graceful,
+      // unknown files are never pruned
+      case None => dataFileEntries(spark, root, v).map { case (abs, sz, mt) =>
+        FileEntry(abs, sz, mt, s"${relativeToRoot(fs, root, abs)}\t$sz\t$mt") }
+    }
+    Head(root, v, effectiveSchema(spark, root, v), columnMapping(fs, root, v),
+      partitionColsOf(spark, root, v), files)
+  }
+
+  /** The CURRENT version resolved as a manifest commit's base, refused
+    * per the composition contract on [[manifestFile]]; None for a root
+    * with no committed version. */
+  private def commitHead(spark: SparkSession, root: String): Option[Head] =
+    currentVersion(spark, root).map { cur =>
+      val fs = Ingest.fs(spark, root)
+      require(dvPartDirs(fs, root, cur).isEmpty,
+        s"manifest commit: $root v$cur carries deletion vectors — applyDv" +
+          " (or compact) first")
+      if (manifestOf(fs, root, cur).isEmpty) {
+        require(dataPath(spark, root, cur) == versionPath(root, cur),
+          s"manifest commit: $root v$cur is a shallow-clone pointer — compact" +
+            " first (gives the clone its own files)")
+        require(columnMapping(fs, root, cur).isEmpty,
+          s"manifest commit: $root v$cur is a renamed plain snapshot (a clone" +
+            " pointer + map) — compact first (materializes the logical names)")
+      }
+      // hive partitioning COMPOSES (manifest relpaths keep their `k=v`
+      // fragments; _MANIFEST_PARTS names the columns), and so do RENAME
+      // maps on MANIFEST versions (carried forward by every commit; DML
+      // translates logical ⇄ physical at its boundaries)
+      head(spark, root, cur)
+    }
 
   /** On-disk bytes of version `v`'s data — manifest versions by their
     * file list (spread across version dirs), plain versions by one
@@ -1064,37 +1128,6 @@ object Warehouse {
       s"manifest commit: data file $abs lives outside $root — compact the" +
         " clone into its own data first")
     abs.stripPrefix(rootQ + "/")
-  }
-
-  /** Preconditions every manifest commit shares (see the composition
-    * contract on [[manifestFile]]). */
-  private def requireManifestable(spark: SparkSession, root: String,
-      cur: Long): Unit = {
-    val fs = Ingest.fs(spark, root)
-    require(dvPartDirs(fs, root, cur).isEmpty,
-      s"manifest commit: $root v$cur carries deletion vectors — applyDv" +
-        " (or compact) first")
-    if (manifestOf(fs, root, cur).isEmpty) {
-      require(dataPath(spark, root, cur) == versionPath(root, cur),
-        s"manifest commit: $root v$cur is a shallow-clone pointer — compact" +
-          " first (gives the clone its own files)")
-      require(columnMapping(fs, root, cur).isEmpty,
-        s"manifest commit: $root v$cur is a renamed plain snapshot (a clone" +
-          " pointer + map) — compact first (materializes the logical names)")
-    }
-    // hive partitioning COMPOSES (manifest relpaths keep their `k=v`
-    // fragments; _MANIFEST_PARTS names the columns — partitionColsOf),
-    // and so do RENAME maps on MANIFEST versions (carried forward by
-    // every commit; DML translates logical ⇄ physical at its
-    // boundaries — see manifestMapping's call sites)
-  }
-
-  /** Version `cur`'s carried rename map (physical → logical) for
-    * manifest DML, plus its inverse. Empty maps for unrenamed chains. */
-  private def manifestMapping(fs: FileSystem, root: String,
-      cur: Long): (Map[String, String], Map[String, String]) = {
-    val m = columnMapping(fs, root, cur)
-    (m, m.map(_.swap))
   }
 
   /** `df` with `m`'s renames applied to matching columns (others,
@@ -1166,44 +1199,6 @@ object Warehouse {
     }
   }
 
-  /** (absolute path → its manifest CARRY line) for version `v`, in
-    * manifest order: a manifest version's lines ride VERBATIM (their
-    * persisted sizes and data-skipping stats survive every carry), a
-    * plain version's are synthesized from its one listing (no stats —
-    * graceful: unknown files are never pruned). */
-  private def carryLines(spark: SparkSession, root: String,
-      v: Long): Seq[(String, String)] = {
-    val fs = Ingest.fs(spark, root)
-    manifestOf(fs, root, v) match {
-      case Some(lines) => lines.map(l =>
-        fs.makeQualified(new Path(root, l.split("\t", 2).head)).toString -> l)
-      case None => dataFileEntries(spark, root, v).map { case (abs, sz, mt) =>
-        abs -> s"${relativeToRoot(fs, root, abs)}\t$sz\t$mt" }
-    }
-  }
-
-  /** Per-file MIN/MAX data-skipping stats for the freshly STAGED
-    * files — the Delta per-file-stats-in-the-log idea: one O(Δ)
-    * aggregation over only the new files at commit time, and
-    * selective reads prune files at PLANNING with zero I/O
-    * ([[graft.sources.v2.ManifestFileIndex]]). Values are persisted
-    * in the PORTABLE forms the pruning comparisons use (timestamps as
-    * epoch micros, dates as epoch days); columns of non-atomic types
-    * are skipped (absent = never pruned). Floating NaN follows the
-    * Parquet/Delta convention: a per-file `nan:<col>` flag is
-    * aggregated alongside min/max, and [[dataFileStats]] DROPS the
-    * column's stats entirely when it is set — Spark orders NaN above
-    * every numeric, so a min/max that silently stripped NaN would
-    * understate the max and let `col > x` prune files whose NaN rows
-    * actually match. Null fields are serialized explicitly
-    * (ignoreNullFields=false), so an ALL-NULL column persists as
-    * `min:null,max:null` — the (None,None) shape the pruning side
-    * reads as "comparisons can never match here". Returns
-    * stage-RELATIVE url-encoded path (partition dirs included — a
-    * partitioned write reuses part-file NAMES across partition dirs,
-    * the DV-key aliasing lesson) → one JSON object with `min:<col>` /
-    * `max:<col>`. Hive partition columns get stats too when present
-    * (the dir value surfaces as a constant column per file). */
   /** Run `f` with AQE disabled on `spark`'s session, restoring the
     * previous value after. The warehouse's per-commit METADATA queries
     * (per-file stats aggregation, touched-file planning, source dup
@@ -1230,6 +1225,28 @@ object Warehouse {
     }
   }
 
+  /** Per-file MIN/MAX data-skipping stats for the freshly STAGED
+    * files — the Delta per-file-stats-in-the-log idea: one O(Δ)
+    * aggregation over only the new files at commit time, and
+    * selective reads prune files at PLANNING with zero I/O
+    * ([[graft.sources.v2.ManifestFileIndex]]). Values are persisted
+    * in the PORTABLE forms the pruning comparisons use (timestamps as
+    * epoch micros, dates as epoch days); columns of non-atomic types
+    * are skipped (absent = never pruned). Floating NaN follows the
+    * Parquet/Delta convention: a per-file `nan:<col>` flag is
+    * aggregated alongside min/max, and [[dataFileStats]] DROPS the
+    * column's stats entirely when it is set — Spark orders NaN above
+    * every numeric, so a min/max that silently stripped NaN would
+    * understate the max and let `col > x` prune files whose NaN rows
+    * actually match. Null fields are serialized explicitly
+    * (ignoreNullFields=false), so an ALL-NULL column persists as
+    * `min:null,max:null` — the (None,None) shape the pruning side
+    * reads as "comparisons can never match here". Returns
+    * stage-RELATIVE url-encoded path (partition dirs included — a
+    * partitioned write reuses part-file NAMES across partition dirs,
+    * the DV-key aliasing lesson) → one JSON object with `min:<col>` /
+    * `max:<col>`. Hive partition columns get stats too when present
+    * (the dir value surfaces as a constant column per file). */
   private def statsJsonByFile(spark: SparkSession, stage: Path,
       schema: org.apache.spark.sql.types.StructType): Map[String, String] = {
     import org.apache.spark.sql.functions._
@@ -1298,8 +1315,7 @@ object Warehouse {
   private def stageManifest(spark: SparkSession, fs: FileSystem,
       stage: Path, next: Long, carried: Seq[String],
       effective: org.apache.spark.sql.types.StructType,
-      parts: Seq[String] = Seq.empty,
-      mapping: Map[String, String] = Map.empty): Unit = {
+      parts: Seq[String], mapping: Map[String, String]): Unit = {
     val stats = statsJsonByFile(spark, stage, effective)
     val stageQ = fs.makeQualified(stage).toString.stripSuffix("/")
     val fresh = listDataFiles(fs, stage).map { s =>
@@ -1321,28 +1337,22 @@ object Warehouse {
         s" carry $total file entries (> $WarnManifestFiles) — run" +
         " Warehouse.optimizeFiles (bin-packs small files, stays in" +
         " manifest mode) or compact to bound metadata growth")
-    val mf = fs.create(new Path(stage, manifestFile), true)
-    try mf.write((carried ++ fresh).mkString("\n")
-      .getBytes(StandardCharsets.UTF_8))
-    finally mf.close()
-    val sc = fs.create(new Path(stage, manifestSchemaFile), true)
-    try sc.write(effective.json.getBytes(StandardCharsets.UTF_8))
-    finally sc.close()
-    if (parts.nonEmpty) {
-      val pf = fs.create(new Path(stage, manifestPartsFile), true)
-      try pf.write(parts.mkString("\n").getBytes(StandardCharsets.UTF_8))
-      finally pf.close()
-    }
-    if (mapping.nonEmpty) {
-      // the carried rename map (physical → logical): every manifest
-      // commit re-persists it so any version of the chain resolves
-      // its own logical names (columnMapping is per-version)
-      val mp = fs.create(new Path(stage, mappingFile), true)
-      try mp.write(mapping.toSeq.sorted
-        .map { case (p, l) => s"$p\t$l" }.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-      finally mp.close()
-    }
+    writeText(fs, new Path(stage, manifestFile), (carried ++ fresh).mkString("\n"))
+    writeText(fs, new Path(stage, manifestSchemaFile), effective.json)
+    if (parts.nonEmpty)
+      writeText(fs, new Path(stage, manifestPartsFile), parts.mkString("\n"))
+    // the carried rename map (physical → logical): every manifest
+    // commit re-persists it so any version of the chain resolves its
+    // own logical names (columnMapping is per-version)
+    if (mapping.nonEmpty)
+      writeText(fs, new Path(stage, mappingFile), mapping.toSeq.sorted
+        .map { case (p, l) => s"$p\t$l" }.mkString("\n"))
+  }
+
+  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
   }
 
   /** Version `v`'s persisted per-file data-skipping stats: absolute
@@ -1415,24 +1425,75 @@ object Warehouse {
     parsed
   }
 
-  /** A caller-supplied marker file published ATOMICALLY with the
-    * version (the streaming sink's exactly-once epoch rides the same
-    * rename as the rows it fences). */
-  private def writeStageMarker(fs: FileSystem, stage: Path,
-      marker: Option[(String, String)]): Unit =
-    marker.foreach { case (name, content) =>
-      val out = fs.create(new Path(stage, name), true)
-      try out.write(content.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-    }
+  /** The PHYSICAL schema a commit of `incoming` (LOGICAL names) onto
+    * `h` persists: every current column must arrive intact
+    * ([[requireSameColumns]]); novel columns append in order — the
+    * additive-evolution widening. A novel name colliding with a renamed
+    * column's PHYSICAL name is loud: the widening would silently fold
+    * its data into the wrong column. */
+  private def widenedSchema(h: Head, incoming: org.apache.spark.sql.types.StructType,
+      what: String): org.apache.spark.sql.types.StructType = {
+    val current = h.logical(h.schema)
+    requireSameColumns(incoming, current, what)
+    val novel = incoming.fields.filterNot(f => current.fieldNames.contains(f.name))
+    val clash = novel.map(_.name).filter(h.schema.fieldNames.contains)
+    require(clash.isEmpty,
+      s"$what: new column(s) ${clash.mkString(", ")} collide with" +
+        " the physical name of a renamed column — pick another name")
+    org.apache.spark.sql.types.StructType(h.schema.fields ++ novel)
+  }
 
-  /** `base` widened by `extra`'s novel columns, appended in order —
-    * the additive-evolution schema union manifest DML persists. */
-  private def widen(base: org.apache.spark.sql.types.StructType,
-      extra: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType = {
-    val have = base.fieldNames.toSet
-    org.apache.spark.sql.types.StructType(
-      base.fields ++ extra.fields.filterNot(f => have(f.name)))
+  /** [[entriesFrame]] surfaced under the version's LOGICAL names —
+    * the names DML predicates, assignments and merge sources use. */
+  private def logicalFiles(spark: SparkSession, h: Head, files: Seq[FileEntry],
+      schema: org.apache.spark.sql.types.StructType, withStats: Boolean = false,
+      withFilePath: Boolean = false): DataFrame =
+    renameCols(entriesFrame(spark, h, files, schema, withStats, withFilePath),
+      h.p2l)
+
+  /** The touched-file planner every file-granular DML shares: `h`'s
+    * files split into (touched, kept), touched = holding at least one
+    * row `select` keeps. `select` sees the LOGICAL names plus `__file`
+    * over the index-backed scan: partition columns resolve (a raw file
+    * read would null-fill them under a predicate) and the persisted
+    * stats PRUNE candidate files before any task runs. The file list is
+    * one driver-side collect bounded by the match's file spread — the
+    * shape Delta's DELETE/MERGE planning uses. */
+  private def planTouched(spark: SparkSession, h: Head,
+      select: DataFrame => DataFrame): (Seq[FileEntry], Seq[FileEntry]) = {
+    if (h.files.isEmpty) return (Nil, Nil)
+    val keys = withAqeOff(spark)(
+      select(logicalFiles(spark, h, h.files, h.schema, withStats = true,
+          withFilePath = true))
+        .select(org.apache.spark.sql.functions.col("__file")).distinct()
+        .collect()).map(_.getString(0)).toSet
+    h.files.partition(e => keys(sparkPathKey(e.path)))
+  }
+
+  /** The publish step every manifest commit ends in: on top of `base`
+    * (None = a fresh root; the read-modify-write fence pins it), `rows`
+    * (LOGICAL names) land as the version's new files under PHYSICAL
+    * names — the file set stays uniform across renames, the Delta
+    * column-mapping contract — in hive layout `parts`; `kept` rides by
+    * reference, and `schema` (physical), `parts` and the rename map
+    * persist as the version's metadata. A caller's `stageMarker` file
+    * publishes ATOMICALLY with the version (the streaming sink's
+    * exactly-once epoch rides the same rename as the rows it fences). */
+  private def publishManifest(spark: SparkSession, root: String,
+      base: Option[Head], kept: Seq[FileEntry],
+      schema: org.apache.spark.sql.types.StructType, parts: Seq[String],
+      lockTtlMs: Long, stageMarker: Option[(String, String)] = None)(
+      rows: => DataFrame): Long = {
+    val fs = Ingest.fs(spark, root)
+    val p2l = base.fold(Map.empty[String, String])(_.p2l)
+    publishVersion(spark, root, lockTtlMs,
+        expectedCurrent = Some(base.map(_.version))) { (stage, next) =>
+      val w = renameCols(rows, p2l.map(_.swap)).write.mode("overwrite")
+      (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(stage.toString)
+      stageManifest(spark, fs, stage, next, kept.map(_.line), schema, parts, p2l)
+      stageMarker.foreach { case (name, content) =>
+        writeText(fs, new Path(stage, name), content) }
+    }
   }
 
   /** O(Δ) APPEND — the manifest-mode insert: writes ONLY `df`'s rows
@@ -1455,51 +1516,23 @@ object Warehouse {
       lockTtlMs: Long = DefaultLockTtlMs,
       stageMarker: Option[(String, String)] = None,
       partitionBy: Seq[String] = Seq.empty): Long = {
-    val fs = Ingest.fs(spark, root)
-    val curOpt = currentVersion(spark, root)
-    val (carried, eff, parts) = curOpt match {
+    val base = commitHead(spark, root)
+    val (schema, parts) = base match {
       case None =>
         partitionBy.foreach(p => require(df.columns.contains(p),
           s"appendFiles: partition column '$p' absent from the frame"))
-        (Seq.empty[String], df.schema, partitionBy)
-      case Some(cur) =>
-        requireManifestable(spark, root, cur)
-        val current = effectiveSchema(spark, root, cur) // PHYSICAL
-        val (p2l, l2p) = manifestMapping(fs, root, cur)
-        val currentLogical = org.apache.spark.sql.types.StructType(
-          current.fields.map(f => f.copy(name = p2l.getOrElse(f.name, f.name))))
-        requireSameColumns(df.schema, currentLogical, "appendFiles")
-        // a NEW (widening) column must not collide with the PHYSICAL
-        // name of a renamed one — the widen below would silently fold
-        // its data into the wrong column
-        val clash = df.schema.fieldNames
-          .filterNot(currentLogical.fieldNames.contains)
-          .filter(current.fieldNames.contains)
-        require(clash.isEmpty,
-          s"appendFiles: new column(s) ${clash.mkString(", ")} collide with" +
-            " the physical name of a renamed column — pick another name")
-        val tableParts = partitionColsOf(spark, root, cur)
+        (df.schema, partitionBy)
+      case Some(h) =>
+        val widened = widenedSchema(h, df.schema, "appendFiles")
         require(partitionBy.isEmpty ||
-          partitionBy.map(n => l2p.getOrElse(n, n)) == tableParts,
-          s"appendFiles: table is partitioned by (${tableParts.mkString(", ")})" +
+          partitionBy.map(n => h.l2p.getOrElse(n, n)) == h.parts,
+          s"appendFiles: table is partitioned by (${h.parts.mkString(", ")})" +
             s" — the requested (${partitionBy.mkString(", ")}) cannot apply" +
             " to an existing layout")
-        (carryLines(spark, root, cur).map(_._2),
-          widen(current, renameCols(df, l2p).schema), tableParts)
+        (widened, h.parts)
     }
-    val mapping = curOpt.map(cur => manifestMapping(fs, root, cur)._1)
-      .getOrElse(Map.empty[String, String])
-    // fresh files land under PHYSICAL names: the whole file set stays
-    // uniform across renames (the Delta column-mapping contract)
-    val dfPhys = renameCols(df, mapping.map(_.swap))
-    publishVersion(spark, root, lockTtlMs, expectedCurrent = Some(curOpt)) {
-      (stage, next) =>
-        if (parts.isEmpty) dfPhys.write.mode("overwrite").parquet(stage.toString)
-        else dfPhys.write.partitionBy(parts: _*).mode("overwrite")
-          .parquet(stage.toString)
-        stageManifest(spark, fs, stage, next, carried, eff, parts, mapping)
-        writeStageMarker(fs, stage, stageMarker)
-    }
+    publishManifest(spark, root, base, base.fold(Seq.empty[FileEntry])(_.files),
+      schema, parts, lockTtlMs, stageMarker)(df)
   }
 
   /** FILE-GRANULAR DELETE — the manifest-mode delete: one predicate
@@ -1519,46 +1552,17 @@ object Warehouse {
       predicate: org.apache.spark.sql.Column,
       lockTtlMs: Long = DefaultLockTtlMs): Option[Long] = {
     import org.apache.spark.sql.functions._
-    val fs = Ingest.fs(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
+    val h = commitHead(spark, root).getOrElse(
       throw new IllegalStateException(
         s"deleteWhereFiles: no committed snapshot under $root"))
-    requireManifestable(spark, root, cur)
+    val (touched, kept) = planTouched(spark, h, _.filter(predicate))
+    if (touched.isEmpty) return None
     // the version's FULL effective schema, never a caller-supplied
     // one: rewriting touched files under a narrower schema would
     // silently drop their extra (widened) columns
-    val schema = effectiveSchema(spark, root, cur) // PHYSICAL
-    val (p2l, l2p) = manifestMapping(fs, root, cur)
-    val parts = partitionColsOf(spark, root, cur)
-    val lines = carryLines(spark, root, cur)
-    if (lines.isEmpty) return None
-    val entries = dataFileEntries(spark, root, cur)
-    // index-backed planning scan: partition columns resolve (a raw
-    // file read would null-fill them under the predicate), the
-    // persisted stats PRUNE candidate files before any task runs, and
-    // the caller's LOGICAL names surface above the physical scan
-    val touchedKeys = withAqeOff(spark)(
-      renameCols(entriesFrame(spark, root, entries, schema,
-          parts, dataFileStats(spark, root, cur), withFilePath = true), p2l)
-        .filter(predicate)
-        .select(col("__file")).distinct()
-        .collect()).map(_.getString(0)).toSet
-    val (touched, kept) = lines.partition(e => touchedKeys(sparkPathKey(e._1)))
-    if (touched.isEmpty) return None
-    val carried = kept.map(_._2) // verbatim: sizes + stats survive
-    val touchedSet = touched.map(_._1).toSet
-    val touchedEntries = entries.filter(e => touchedSet(e._1))
-    Some(publishVersion(spark, root, lockTtlMs,
-        expectedCurrent = Some(Some(cur))) { (stage, next) =>
-      // filter under LOGICAL names, write back under PHYSICAL ones
-      val survivors = renameCols(
-        renameCols(entriesFrame(spark, root, touchedEntries, schema, parts), p2l)
-          .filter(!coalesce(predicate, lit(false))), l2p)
-      (if (parts.isEmpty) survivors.write
-       else survivors.write.partitionBy(parts: _*))
-        .mode("overwrite").parquet(stage.toString)
-      stageManifest(spark, fs, stage, next, carried, schema, parts, p2l)
-    })
+    Some(publishManifest(spark, root, Some(h), kept, h.schema, h.parts,
+      lockTtlMs)(logicalFiles(spark, h, touched, h.schema)
+        .filter(!coalesce(predicate, lit(false)))))
   }
 
   /** FILE-GRANULAR UPDATE — `SET col = expr` applied to predicate
@@ -1573,58 +1577,31 @@ object Warehouse {
       lockTtlMs: Long = DefaultLockTtlMs): Option[Long] = {
     import org.apache.spark.sql.functions._
     require(set.nonEmpty, "updateWhereFiles: empty SET")
-    val fs = Ingest.fs(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
+    val h = commitHead(spark, root).getOrElse(
       throw new IllegalStateException(
         s"updateWhereFiles: no committed snapshot under $root"))
-    requireManifestable(spark, root, cur)
-    // full effective schema — see [[deleteWhereFiles]]'s rationale
-    val schema = effectiveSchema(spark, root, cur) // PHYSICAL
-    val (p2l, l2p) = manifestMapping(fs, root, cur)
-    val logicalSchema = org.apache.spark.sql.types.StructType(
-      schema.fields.map(f => f.copy(name = p2l.getOrElse(f.name, f.name))))
+    val logicalSchema = h.logical(h.schema)
     set.keys.foreach(k => require(logicalSchema.fieldNames.contains(k),
       s"updateWhereFiles: SET names unknown column '$k'"))
-    val parts = partitionColsOf(spark, root, cur)
-    val logicalParts = parts.map(p => p2l.getOrElse(p, p))
+    val logicalParts = h.parts.map(p => h.p2l.getOrElse(p, p))
     set.keys.foreach(k => require(!logicalParts.contains(k),
       s"updateWhereFiles: '$k' is a partition column — reassigning it" +
         " moves rows across partitions; delete + append instead"))
-    val lines = carryLines(spark, root, cur)
-    if (lines.isEmpty) return None
-    val entries = dataFileEntries(spark, root, cur)
-    val touchedKeys = withAqeOff(spark)(
-      renameCols(entriesFrame(spark, root, entries, schema,
-          parts, dataFileStats(spark, root, cur), withFilePath = true), p2l)
-        .filter(predicate)
-        .select(col("__file")).distinct()
-        .collect()).map(_.getString(0)).toSet
-    val (touched, kept) = lines.partition(e => touchedKeys(sparkPathKey(e._1)))
+    val (touched, kept) = planTouched(spark, h, _.filter(predicate))
     if (touched.isEmpty) return None
-    val carried = kept.map(_._2) // verbatim: sizes + stats survive
-    val touchedSet = touched.map(_._1).toSet
-    val touchedEntries = entries.filter(e => touchedSet(e._1))
-    Some(publishVersion(spark, root, lockTtlMs,
-        expectedCurrent = Some(Some(cur))) { (stage, next) =>
-      val hit = coalesce(predicate, lit(false))
-      // ONE projection under LOGICAL names, every RHS evaluated
-      // against the OLD row (SQL UPDATE semantics) — sequential
-      // withColumn would feed later assignments already-updated
-      // values in Map iteration order; write back under PHYSICAL
-      val updated = renameCols(
-        renameCols(entriesFrame(spark, root, touchedEntries, schema, parts), p2l)
-          .select(logicalSchema.fields.map { f =>
-            set.get(f.name) match {
-              case Some(e) => when(hit, e.cast(f.dataType))
-                .otherwise(col(s"`${f.name}`")).as(f.name)
-              case None => col(s"`${f.name}`")
-            }
-          }.toSeq: _*), l2p)
-      (if (parts.isEmpty) updated.write
-       else updated.write.partitionBy(parts: _*))
-        .mode("overwrite").parquet(stage.toString)
-      stageManifest(spark, fs, stage, next, carried, schema, parts, p2l)
-    })
+    val hit = coalesce(predicate, lit(false))
+    // ONE projection, every RHS evaluated against the OLD row (SQL
+    // UPDATE semantics) — sequential withColumn would feed later
+    // assignments already-updated values in Map iteration order
+    Some(publishManifest(spark, root, Some(h), kept, h.schema, h.parts,
+      lockTtlMs)(logicalFiles(spark, h, touched, h.schema)
+        .select(logicalSchema.fields.map { f =>
+          set.get(f.name) match {
+            case Some(e) => when(hit, e.cast(f.dataType))
+              .otherwise(col(s"`${f.name}`")).as(f.name)
+            case None => col(s"`${f.name}`")
+          }
+        }.toSeq: _*)))
   }
 
   /** FILE-GRANULAR keyed UPSERT (last-writer-wins MERGE) — the
@@ -1641,38 +1618,19 @@ object Warehouse {
     import org.apache.spark.sql.functions._
     require(source.columns.contains(keyCol),
       s"mergeFiles: source has no key column '$keyCol'")
-    val fs = Ingest.fs(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
+    val h = commitHead(spark, root).getOrElse(
       // first commit: the merge IS the table
       return appendFiles(spark, root, source, lockTtlMs, stageMarker))
-    requireManifestable(spark, root, cur)
     // full effective schema, widened by the source's novel columns —
     // see [[deleteWhereFiles]]'s rationale; survivors of touched
     // files null-fill the widened columns (the additive contract)
-    val current = effectiveSchema(spark, root, cur) // PHYSICAL
-    val (p2l, l2p) = manifestMapping(fs, root, cur)
-    val currentLogical = org.apache.spark.sql.types.StructType(
-      current.fields.map(f => f.copy(name = p2l.getOrElse(f.name, f.name))))
-    requireSameColumns(source.schema, currentLogical, "mergeFiles")
-    val clash = source.schema.fieldNames
-      .filterNot(currentLogical.fieldNames.contains)
-      .filter(current.fieldNames.contains)
-    require(clash.isEmpty,
-      s"mergeFiles: new column(s) ${clash.mkString(", ")} collide with" +
-        " the physical name of a renamed column — pick another name")
-    // LOGICAL schema of the result; its physical twin goes on disk
-    val logicalSchema = widen(currentLogical, source.schema)
-    val schema = org.apache.spark.sql.types.StructType(
-      logicalSchema.fields.map(f => f.copy(name = l2p.getOrElse(f.name, f.name))))
-    val parts = partitionColsOf(spark, root, cur)
-    val lines = carryLines(spark, root, cur)
-    val entries = dataFileEntries(spark, root, cur)
+    val schema = widenedSchema(h, source.schema, "mergeFiles")
     // PIN the source FIRST (it evaluates in several jobs: dup check,
     // touched-file plan, final write — a nondeterministic upstream
     // could pass the check yet materialize a duplicate), THEN check
     // the pinned rows
     val src = source.select(
-      logicalSchema.fieldNames.map(n => col(s"`$n`")).toSeq: _*)
+      h.logical(schema).fieldNames.map(n => col(s"`$n`")).toSeq: _*)
       .localCheckpoint(true)
     val dup = withAqeOff(spark)(src.groupBy(col(s"`$keyCol`")).count()
       .filter(col("count") > 1).limit(1).collect())
@@ -1680,31 +1638,14 @@ object Warehouse {
       s"mergeFiles: source carries duplicate key '${dup.headOption.map(_.get(0))
         .getOrElse("")}' — no deterministic last-writer; dedupe first")
     val srcKeys = src.select(col(s"`$keyCol`").as("__mk")).distinct()
-    val touchedKeys =
-      if (entries.isEmpty) Set.empty[String]
-      else withAqeOff(spark)(
-        renameCols(entriesFrame(spark, root, entries, current, parts,
-            withFilePath = true), p2l)
-          .join(srcKeys, col(s"`$keyCol`") === col("__mk"), "left_semi")
-          .select(col("__file")).distinct()
-          .collect()).map(_.getString(0)).toSet
-    val (touched, kept) = lines.partition(e => touchedKeys(sparkPathKey(e._1)))
-    val carried = kept.map(_._2) // verbatim: sizes + stats survive
-    val touchedSet = touched.map(_._1).toSet
-    val touchedEntries = entries.filter(e => touchedSet(e._1))
-    publishVersion(spark, root, lockTtlMs,
-        expectedCurrent = Some(Some(cur))) { (stage, next) =>
-      val survivors = renameCols(
-        (if (touched.isEmpty) src
-         else renameCols(
-             entriesFrame(spark, root, touchedEntries, schema, parts), p2l)
-           .join(srcKeys, col(s"`$keyCol`") === col("__mk"), "left_anti")
-           .unionByName(src)), l2p)
-      (if (parts.isEmpty) survivors.write
-       else survivors.write.partitionBy(parts: _*))
-        .mode("overwrite").parquet(stage.toString)
-      stageManifest(spark, fs, stage, next, carried, schema, parts, p2l)
-      writeStageMarker(fs, stage, stageMarker)
+    def byKey(df: DataFrame, how: String) =
+      df.join(srcKeys, col(s"`$keyCol`") === col("__mk"), how)
+    val (touched, kept) = planTouched(spark, h, byKey(_, "left_semi"))
+    publishManifest(spark, root, Some(h), kept, schema, h.parts, lockTtlMs,
+        stageMarker) {
+      if (touched.isEmpty) src
+      else byKey(logicalFiles(spark, h, touched, schema), "left_anti")
+        .unionByName(src)
     }
   }
 
@@ -2135,15 +2076,12 @@ object Warehouse {
             // and a carried rename map reads PHYSICAL then surfaces
             // the feed's era-v LOGICAL names (a logical-schema'd read
             // would null-fill every renamed column)
-            val newAbs = newRel.map(r =>
-              fs.makeQualified(new Path(root, r)).toString).toSet
             val l2p = columnMapping(fs, root, v).map(_.swap)
             val physSchema = org.apache.spark.sql.types.StructType(
               schema.fields.map(f =>
                 f.copy(name = l2p.getOrElse(f.name, f.name))))
-            val newRows0 = entriesFrame(spark, root,
-              dataFileEntries(spark, root, v).filter(e => newAbs(e._1)),
-              physSchema, manifestParts(fs, root, v))
+            val newRows0 = readManifestFiles(spark, root, v, newRel.toSet,
+              physSchema)
             val newRows =
               if (l2p.isEmpty) newRows0
               else newRows0.select(schema.fieldNames.toSeq.map(n =>
@@ -2609,24 +2547,6 @@ object Warehouse {
       partitionBy = partitionCols)
   }
 
-  /** CLUSTERED COMPACTION — [[compact]]'s layout rewrite upgraded to
-    * the full maintenance op a 100 TB table actually schedules
-    * (Delta's `OPTIMIZE ... ZORDER BY`): the snapshot is rewritten
-    * Z-ORDERED on two query columns (range-partitioned on the Morton
-    * interleave, sorted within files — [[graft.operators.Zorder
-    * .cluster]]) and the published version immediately gets a
-    * [[graft.sources.ZoneMap]] sidecar over those columns. Content is
-    * byte-identical (layout only — the p18 gate hashes it against the
-    * pre-compaction oracle); what changes is SELECTIVITY: on a
-    * z-clustered layout each file covers a narrow (colA, colB)
-    * rectangle, so the zone map prunes range scans to a handful of
-    * files where the unclustered layout reads all of them (measured
-    * in RenameSpec's sibling ClusteredCompactionSpec). Same
-    * read-modify-write fencing as [[compact]]; the zone map is built
-    * AFTER publish, so a reader between publish and index lands on
-    * the plain (index-less) path, never a stale index (build is
-    * create-only; [[graft.sources.ZoneMap.refresh]] maintains it
-    * across appends). */
   /** OPTIMIZE for MANIFEST tables — the mechanism that BOUNDS manifest
     * metadata growth (Delta OPTIMIZE's shape): bin-packs every data
     * file smaller than `smallFileBytes` into ~`targetFileBytes` files
@@ -2654,28 +2574,16 @@ object Warehouse {
       lockTtlMs: Long = DefaultLockTtlMs): Option[Long] = {
     require(targetFileBytes >= 1 && smallFileBytes >= 1,
       "optimizeFiles: byte thresholds must be positive")
-    val fs = Ingest.fs(spark, root)
-    val cur = currentVersion(spark, root).getOrElse(
+    val h = commitHead(spark, root).getOrElse(
       throw new IllegalStateException(
         s"optimizeFiles: no committed snapshot under $root"))
-    requireManifestable(spark, root, cur)
-    val schema = effectiveSchema(spark, root, cur) // PHYSICAL
-    val (p2l, _) = manifestMapping(fs, root, cur)
-    val parts = partitionColsOf(spark, root, cur)
-    val lines = carryLines(spark, root, cur)
-    val entries = dataFileEntries(spark, root, cur)
-    val bySize = entries.map(e => e._1 -> e._2).toMap
-    val (small, big) = lines.partition(e =>
-      bySize.get(e._1).exists(_ < smallFileBytes))
+    val (small, big) = h.files.partition(_.size < smallFileBytes)
     if (small.size < minInputFiles) return None
-    val carried = big.map(_._2) // verbatim: sizes + stats survive
-    val smallSet = small.map(_._1).toSet
-    val smallEntries = entries.filter(e => smallSet(e._1))
-    val smallBytes = smallEntries.map(_._2).sum
-    val n = math.max(1L, (smallBytes + targetFileBytes - 1L) / targetFileBytes)
-    Some(publishVersion(spark, root, lockTtlMs,
-        expectedCurrent = Some(Some(cur))) { (stage, next) =>
-      val small = entriesFrame(spark, root, smallEntries, schema, parts)
+    val n = math.max(1L,
+      (small.map(_.size).sum + targetFileBytes - 1L) / targetFileBytes).toInt
+    Some(publishManifest(spark, root, Some(h), big, h.schema, h.parts,
+        lockTtlMs) {
+      val rows = logicalFiles(spark, h, small, h.schema)
       // partitioned tables CLUSTER the pack by the partition columns:
       // a round-robin repartition(n) would spray every partition's
       // rows across all n tasks and the dynamic write would emit up
@@ -2683,17 +2591,30 @@ object Warehouse {
       // Hash-clustering keeps each partition's rows in one task ⇒
       // ~one packed file per partition dir (a single giant partition
       // value can exceed the target; hive dirs cannot merge anyway).
-      val packed =
-        if (parts.isEmpty) small.repartition(n.toInt)
-        else small.repartition(n.toInt,
-          parts.map(p => org.apache.spark.sql.functions.col(s"`$p`")): _*)
-      (if (parts.isEmpty) packed.write
-       else packed.write.partitionBy(parts: _*))
-        .mode("overwrite").parquet(stage.toString)
-      stageManifest(spark, fs, stage, next, carried, schema, parts, p2l)
+      if (h.parts.isEmpty) rows.repartition(n)
+      else rows.repartition(n, h.parts.map(p =>
+        org.apache.spark.sql.functions.col(s"`${h.p2l.getOrElse(p, p)}`")): _*)
     })
   }
 
+  /** CLUSTERED COMPACTION — [[compact]]'s layout rewrite upgraded to
+    * the full maintenance op a 100 TB table actually schedules
+    * (Delta's `OPTIMIZE ... ZORDER BY`): the snapshot is rewritten
+    * Z-ORDERED on two query columns (range-partitioned on the Morton
+    * interleave, sorted within files — [[graft.operators.Zorder
+    * .cluster]]) and the published version immediately gets a
+    * [[graft.sources.ZoneMap]] sidecar over those columns. Content is
+    * byte-identical (layout only — the p18 gate hashes it against the
+    * pre-compaction oracle); what changes is SELECTIVITY: on a
+    * z-clustered layout each file covers a narrow (colA, colB)
+    * rectangle, so the zone map prunes range scans to a handful of
+    * files where the unclustered layout reads all of them (measured
+    * in RenameSpec's sibling ClusteredCompactionSpec). Same
+    * read-modify-write fencing as [[compact]]; the zone map is built
+    * AFTER publish, so a reader between publish and index lands on
+    * the plain (index-less) path, never a stale index (build is
+    * create-only; [[graft.sources.ZoneMap.refresh]] maintains it
+    * across appends). */
   def compactClustered(spark: SparkSession, root: String,
       colA: String, colB: String,
       targetFileBytes: Long = 128L * 1024 * 1024,

@@ -22,11 +22,6 @@ import graft.pipeline.{CocoaSchema, Enrich, Merge, Warehouse}
   */
 object CocoaStream {
 
-  /** Run one drain of the landing zone into the warehouse. Returns the
-    * number of micro-batches processed. `processedAt` pins the audit
-    * stamp for every micro-batch of this drain (tests / oracle-checked
-    * runs); `None` stamps wall-clock per batch like the reference's
-    * per-chunk utcnow(). */
   /** Thrown by the spec/gate crash knob — a stand-in for the executor
     * or driver dying BETWEEN the warehouse commit and the checkpoint
     * commit, the worst-ordered crash window: the restarted query
@@ -36,11 +31,15 @@ object CocoaStream {
   final class SimulatedCrash extends RuntimeException(
     "simulated crash after warehouse commit, before checkpoint commit")
 
+  /** Run one drain of the landing zone into the warehouse. Returns the
+    * number of micro-batches processed. `processedAt` pins the audit
+    * stamp for every micro-batch of this drain (tests / oracle-checked
+    * runs); `None` stamps wall-clock per batch like the reference's
+    * per-chunk utcnow(). */
   def runAvailableNow(spark: SparkSession, landingDir: String,
       warehouseDir: String, checkpointDir: String,
       maxFilesPerTrigger: Option[Int] = None,
       processedAt: Option[Timestamp] = None,
-      broadcastMergeKeys: Boolean = true,
       crashAfterBatches: Option[Long] = None): Long = {
 
     // enforceSchema=false: the streaming file source has no per-file
@@ -68,7 +67,7 @@ object CocoaStream {
         val enriched = Enrich.enrich(batch,
           processedAt.getOrElse(new Timestamp(System.currentTimeMillis())))
         val target = Warehouse.read(spark, warehouseDir)
-        val merged = Merge.upsertShipments(target, enriched, broadcastMergeKeys)
+        val merged = Merge.upsertShipments(target, enriched)
         Warehouse.commit(spark, warehouseDir, merged)
         batches += 1
         // crash knob: die AFTER the commit, BEFORE the checkpoint
