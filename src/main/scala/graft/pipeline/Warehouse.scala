@@ -845,7 +845,18 @@ object Warehouse {
     * pointer (its files live in another root that may vacuum them) —
     * each refusal names the valve. [[vacuum]] is manifest-aware: a
     * version dir whose files any RETAINED manifest still references
-    * survives the retention floor. */
+    * survives the retention floor.
+    *
+    * Each line of a NEWLY written file also carries its per-file
+    * MIN/MAX data-skipping stats as a JSON column (the Delta
+    * per-file-stats-in-the-log idea), so selective reads prune files
+    * at PLANNING with zero I/O ([[graft.sources.v2.ManifestFileIndex]]).
+    * The stats are collected by the write job itself, one pass over
+    * the rows as they are written
+    * ([[org.apache.spark.sql.graftbridge.FileStatsTracker]]) — never
+    * by re-reading the files, and never from parquet footers (Spark
+    * writes timestamps as INT96, whose footer min/max is undefined).
+    * Carried lines keep their stats verbatim. */
   private val manifestFile = "_MANIFEST"
 
   /** Manifest length past which each commit logs a loud warning naming
@@ -1201,8 +1212,8 @@ object Warehouse {
 
   /** Run `f` with AQE disabled on `spark`'s session, restoring the
     * previous value after. The warehouse's per-commit METADATA queries
-    * (per-file stats aggregation, touched-file planning, source dup
-    * checks) are bounded O(files)-row collects; AQE materializes each
+    * (touched-file planning, the merge source's dup check) are
+    * bounded O(files)-row collects; AQE materializes each
     * of their exchanges as its OWN Spark job — pure scheduling latency
     * (~0.1-0.2 s/job locally) that DML-heavy workloads pay per
     * statement, with nothing for AQE to re-plan at these sizes
@@ -1211,10 +1222,14 @@ object Warehouse {
     * exact aggregations/semi-joins whose physical shape is all AQE
     * could change. Set/restore on the caller's session (the
     * withStreamPartitions pattern) — commit paths are single-threaded
-    * per session, and a throw restores via finally. */
+    * per session, and a throw restores via finally. A key the caller
+    * never set is UNSET again, not pinned to its default: the
+    * previous value comes from `conf.getAll` (explicit sets only),
+    * since `conf.getOption` reports the registered default for an
+    * unset key. */
   private def withAqeOff[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
+    val prev = spark.conf.getAll.get(key)
     if (prev.contains("false")) f
     else {
       spark.conf.set(key, "false")
@@ -1225,108 +1240,27 @@ object Warehouse {
     }
   }
 
-  /** Per-file MIN/MAX data-skipping stats for the freshly STAGED
-    * files — the Delta per-file-stats-in-the-log idea: one O(Δ)
-    * aggregation over only the new files at commit time, and
-    * selective reads prune files at PLANNING with zero I/O
-    * ([[graft.sources.v2.ManifestFileIndex]]). Values are persisted
-    * in the PORTABLE forms the pruning comparisons use (timestamps as
-    * epoch micros, dates as epoch days); columns of non-atomic types
-    * are skipped (absent = never pruned). Floating NaN follows the
-    * Parquet/Delta convention: a per-file `nan:<col>` flag is
-    * aggregated alongside min/max, and [[dataFileStats]] DROPS the
-    * column's stats entirely when it is set — Spark orders NaN above
-    * every numeric, so a min/max that silently stripped NaN would
-    * understate the max and let `col > x` prune files whose NaN rows
-    * actually match. Null fields are serialized explicitly
-    * (ignoreNullFields=false), so an ALL-NULL column persists as
-    * `min:null,max:null` — the (None,None) shape the pruning side
-    * reads as "comparisons can never match here". Returns
-    * stage-RELATIVE url-encoded path (partition dirs included — a
-    * partitioned write reuses part-file NAMES across partition dirs,
-    * the DV-key aliasing lesson) → one JSON object with `min:<col>` /
-    * `max:<col>`. Hive partition columns get stats too when present
-    * (the dir value surfaces as a constant column per file). */
-  private def statsJsonByFile(spark: SparkSession, stage: Path,
-      schema: org.apache.spark.sql.types.StructType): Map[String, String] = {
-    import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.types._
-    val statCols = schema.fields.filter(f => f.dataType match {
-      case _: NumericType | StringType | TimestampType | DateType => true
-      case _ => false
-    })
-    if (statCols.isEmpty) return Map.empty
-    def port(c: org.apache.spark.sql.Column, dt: DataType) = dt match {
-      case TimestampType => unix_micros(c)
-      case DateType => datediff(c, to_date(lit("1970-01-01")))
-      case FloatType | DoubleType => when(isnan(c), lit(null)).otherwise(c)
-      case _ => c
-    }
-    val aggs = statCols.toSeq.flatMap { f =>
-      val base = Seq(
-        min(port(col(s"`${f.name}`"), f.dataType)).as(s"min:${f.name}"),
-        max(port(col(s"`${f.name}`"), f.dataType)).as(s"max:${f.name}"))
-      f.dataType match {
-        // the NaN flag (see scaladoc): any NaN row invalidates the
-        // column's min/max for pruning purposes
-        case FloatType | DoubleType =>
-          base :+ max(isnan(col(s"`${f.name}`"))).as(s"nan:${f.name}")
-        case _ => base
-      }
-    }
-    // explicit schema: no inference job, and an empty staged write
-    // (zero part files in some layouts) stays safe
-    val staged = scala.util.Try(
-      spark.read.schema(schema).parquet(stage.toString)).getOrElse(
-      return Map.empty)
-    // No isEmpty pre-check: an all-empty stage aggregates to zero
-    // groups → Map.empty anyway, and the check was a whole extra
-    // Spark job on EVERY manifest commit (zero-row files are already
-    // handled by absence — a file with no rows gets no stats line and
-    // is simply never pruned).
-    // key on the stage-RELATIVE path in _metadata.file_path's own
-    // URL-ENCODED form; the stage dir name (`.v<N>_<uuid>`) contains
-    // no encodable characters, so the marker match is exact
-    val marker = "/" + stage.getName + "/"
-    val grouped = withAqeOff(spark)(staged
-      .groupBy(col("_metadata.file_path").as("__f"))
-      // ignoreNullFields=false: an all-null column must SERIALIZE its
-      // nulls (min:null,max:null = the "never matches a comparison"
-      // convention) — the default would drop the fields and make that
-      // file look stat-less (never pruned) instead
-      .agg(to_json(struct(aggs: _*),
-        Map("ignoreNullFields" -> "false")).as("__stats"))
-      .collect())
-    grouped.map { r =>
-      val enc = r.getString(0)
-      val i = enc.lastIndexOf(marker)
-      require(i >= 0, s"graft: staged stats row $enc is not under $stage")
-      enc.substring(i + marker.length) -> r.getString(1)
-    }.toMap
-  }
-
   /** The staged parquet files of a manifest commit, as
     * `v{next}/[k=v/…]name` manifest entries (with size, mtime, and
-    * data-skipping stats), written alongside the `_MANIFEST` list and
-    * the effective-schema sidecar. A hive-PARTITIONED stage keeps its
+    * the data-skipping stats the write itself collected — `stats` maps
+    * each file's stage-relative literal path to its JSON, see
+    * [[org.apache.spark.sql.graftbridge.FileStatsTracker]]), written
+    * alongside the `_MANIFEST` list and the effective-schema sidecar.
+    * A file without a `stats` entry (zero rows) gets no stats column
+    * and is simply never pruned. A hive-PARTITIONED stage keeps its
     * partition dirs inside the relpath — the path fragments ARE the
     * partition-value store ([[manifestPartsFile]]) — and persists the
     * partition column names as the `_MANIFEST_PARTS` sidecar. */
-  private def stageManifest(spark: SparkSession, fs: FileSystem,
-      stage: Path, next: Long, carried: Seq[String],
+  private def stageManifest(fs: FileSystem, stage: Path, next: Long,
+      stats: Map[String, String], carried: Seq[String],
       effective: org.apache.spark.sql.types.StructType,
       parts: Seq[String], mapping: Map[String, String]): Unit = {
-    val stats = statsJsonByFile(spark, stage, effective)
     val stageQ = fs.makeQualified(stage).toString.stripSuffix("/")
     val fresh = listDataFiles(fs, stage).map { s =>
       val rel = fs.makeQualified(s.getPath).toString
         .stripPrefix(stageQ + "/")
-      val enc = org.apache.spark.paths.SparkPath
-        .fromPath(s.getPath).toString
-        .stripPrefix(org.apache.spark.paths.SparkPath
-          .fromPath(fs.makeQualified(stage)).toString + "/")
       val base = s"v$next/$rel\t${s.getLen}\t${s.getModificationTime}"
-      stats.get(enc).fold(base)(j => s"$base\t$j")
+      stats.get(rel).fold(base)(j => s"$base\t$j")
     }
     val total = carried.size + fresh.size
     if (total > WarnManifestFiles)
@@ -1357,8 +1291,9 @@ object Warehouse {
 
   /** Version `v`'s persisted per-file data-skipping stats: absolute
     * file path → column → (min, max) in the pruning-portable external
-    * forms ([[statsJsonByFile]]); files or columns without stats are
-    * simply absent (never pruned). JSON nulls on BOTH sides mean an
+    * forms the commit's write collected
+    * ([[org.apache.spark.sql.graftbridge.FileStatsTracker]]); files or
+    * columns without stats are simply absent (never pruned). JSON nulls on BOTH sides mean an
     * all-null column in that file (equality can never match there —
     * the zone-map convention). A column whose `nan:` flag is set is
     * DROPPED here (NaN-bearing files must never be pruned — NaN sorts
@@ -1476,7 +1411,9 @@ object Warehouse {
     * names — the file set stays uniform across renames, the Delta
     * column-mapping contract — in hive layout `parts`; `kept` rides by
     * reference, and `schema` (physical), `parts` and the rename map
-    * persist as the version's metadata. A caller's `stageMarker` file
+    * persist as the version's metadata. The write is ONE Spark job
+    * that also collects the new files' data-skipping stats over
+    * `schema`'s columns. A caller's `stageMarker` file
     * publishes ATOMICALLY with the version (the streaming sink's
     * exactly-once epoch rides the same rename as the rows it fences). */
   private def publishManifest(spark: SparkSession, root: String,
@@ -1488,9 +1425,13 @@ object Warehouse {
     val p2l = base.fold(Map.empty[String, String])(_.p2l)
     publishVersion(spark, root, lockTtlMs,
         expectedCurrent = Some(base.map(_.version))) { (stage, next) =>
-      val w = renameCols(rows, p2l.map(_.swap)).write.mode("overwrite")
-      (if (parts.isEmpty) w else w.partitionBy(parts: _*)).parquet(stage.toString)
-      stageManifest(spark, fs, stage, next, kept.map(_.line), schema, parts, p2l)
+      val df = renameCols(rows, p2l.map(_.swap))
+      val stats = new org.apache.spark.sql.graftbridge.FileStatsTracker(
+        df.schema, parts, schema)
+      org.apache.spark.sql.graftbridge.Bridge.writeParquet(df, stage.toString,
+        parts, Seq(stats))
+      stageManifest(fs, stage, next, stats.collected, kept.map(_.line),
+        schema, parts, p2l)
       stageMarker.foreach { case (name, content) =>
         writeText(fs, new Path(stage, name), content) }
     }
@@ -1632,11 +1573,16 @@ object Warehouse {
     val src = source.select(
       h.logical(schema).fieldNames.map(n => col(s"`$n`")).toSeq: _*)
       .localCheckpoint(true)
-    val dup = withAqeOff(spark)(src.groupBy(col(s"`$keyCol`")).count()
-      .filter(col("count") > 1).limit(1).collect())
-    require(dup.isEmpty,
-      s"mergeFiles: source carries duplicate key '${dup.headOption.map(_.get(0))
-        .getOrElse("")}' — no deterministic last-writer; dedupe first")
+    // ONE job: a global aggregate, not limit(1), whose collect scans
+    // one shuffle partition first and runs a second job whenever the
+    // source is clean. groupBy puts NULL keys in one group, so two
+    // NULL keys are a duplicate too.
+    val dup = withAqeOff(spark)(src.groupBy(col(s"`$keyCol`").as("__k")).count()
+      .filter(col("count") > 1)
+      .agg(count(lit(1)), min(col("__k"))).head())
+    require(dup.getLong(0) == 0,
+      s"mergeFiles: source carries duplicate key '${dup.get(1)}'" +
+        " — no deterministic last-writer; dedupe first")
     val srcKeys = src.select(col(s"`$keyCol`").as("__mk")).distinct()
     def byKey(df: DataFrame, how: String) =
       df.join(srcKeys, col(s"`$keyCol`") === col("__mk"), how)

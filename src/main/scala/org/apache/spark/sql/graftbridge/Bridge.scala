@@ -60,6 +60,39 @@ object Bridge {
       org.apache.spark.sql.execution.datasources.LogicalRelation(rel))
   }
 
+  /** `df.write.partitionBy(partitionBy: _*).parquet(dir)` into a FRESH
+    * `dir`, with the caller's `trackers` seeing every written file and
+    * row — the seam Delta's transactional write uses, since
+    * DataFrameWriter takes no stats trackers. `FileFormatWriter.write`
+    * runs under one SQL execution, with Spark's
+    * BasicWriteJobStatsTracker alongside so task output metrics stay
+    * as a DataFrameWriter write reports them; the committer, part-file
+    * names, `_SUCCESS`, and the Empty2Null + sort of partition columns
+    * are the ones the write command uses. */
+  def writeParquet(df: DataFrame, dir: String, partitionBy: Seq[String],
+      trackers: Seq[org.apache.spark.sql.execution.datasources.WriteJobStatsTracker]): Unit = {
+    import org.apache.spark.sql.execution.datasources._
+    val ds = df.asInstanceOf[ClassicDataset[_]]
+    val s = ds.sparkSession
+    val qe = ds.queryExecution
+    val conf = s.sessionState.conf
+    PartitioningUtils.validatePartitionColumn(df.schema, partitionBy, conf.caseSensitiveAnalysis)
+    val output = qe.executedPlan.output
+    val partCols = partitionBy.map(p => output.find(a => conf.resolver(a.name, p)).get)
+    val hadoopConf = s.sessionState.newHadoopConf()
+    val committer = org.apache.spark.internal.io.FileCommitProtocol.instantiate(
+      conf.fileCommitProtocolClass, java.util.UUID.randomUUID().toString, dir)
+    val basic = new BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe, Some("save")) {
+      FileFormatWriter.write(s, qe.executedPlan,
+        new parquet.ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(dir, Map.empty, output), hadoopConf,
+        partCols, None, basic +: trackers, Map.empty)
+    }
+  }
+
   /** The inverse seam, for V1 streaming SOURCES: `getBatch` must hand
     * the engine a plan marked `isStreaming = true` (MicroBatchExecution
     * asserts it), while the batch itself is an ordinary computed

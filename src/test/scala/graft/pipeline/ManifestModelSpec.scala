@@ -87,6 +87,9 @@ class ManifestModelSpec extends AnyFunSuite {
     val init = Gen.listOfN(12, rowGen).apply(Gen.Parameters.default, Seed(seed * 7919L))
       .getOrElse(Nil).map(fresh)
     var model: Map[String, Row] = init.map(r => r.id -> r).toMap
+    // snapshot BEFORE the first commit: a restore that pins an unset
+    // key to its default would otherwise hide in every later snapshot
+    val conf0 = spark.conf.getAll
     Warehouse.appendFiles(spark, root, frame(init),
       partitionBy = if (partitioned) Seq("region") else Nil)
     val ops = Gen.listOfN(Steps, opGen)
@@ -95,7 +98,6 @@ class ManifestModelSpec extends AnyFunSuite {
     var refusals = 0
     ops.zipWithIndex.foreach { case (op, step) =>
       val ctx = s"seed $seed step $step ${if (partitioned) "partitioned" else "flat"}: $op"
-      val conf0 = spark.conf.getAll
       val before = Warehouse.currentVersion(spark, root)
       def inRange(lo: Int, hi: Int)(r: Row) = r.qty.exists(q => lo <= q && q <= hi)
       def expectVersion(matched: Boolean, got: Option[Long]): Unit =
