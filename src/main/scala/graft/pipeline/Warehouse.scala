@@ -47,12 +47,7 @@ object Warehouse {
   private def readLease(fs: FileSystem, lock: Path): Option[Lease] = {
     if (!fs.exists(lock)) return None
     try {
-      val in = fs.open(lock)
-      val txt =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8).trim
-        finally in.close()
-      txt.split("\\s+") match {
+      readText(fs, lock).trim.split("\\s+") match {
         case Array(id, ts) if ts.matches("\\d+") => Some(Lease(id, ts.toLong))
         case _ => Some(Lease("<torn>", fs.getFileStatus(lock).getModificationTime))
       }
@@ -132,12 +127,7 @@ object Warehouse {
   private def pointerVersion(fs: FileSystem, root: String): Option[Long] = {
     val vf = new Path(root, versionFile)
     if (!fs.exists(vf)) None
-    else {
-      val in = fs.open(vf)
-      try Some(new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8).trim.toLong)
-      finally in.close()
-    }
+    else Some(readText(fs, vf).trim.toLong)
   }
 
   private def completeSnapshots(spark: SparkSession, root: String): Seq[Long] = {
@@ -180,11 +170,7 @@ object Warehouse {
     val marker = new Path(versionPath(root, v), clonePointer)
     if (!fs.exists(marker)) versionPath(root, v)
     else {
-      val in = fs.open(marker)
-      val target =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8).trim
-        finally in.close()
+      val target = readText(fs, marker).trim
       if (!fs.exists(new Path(target, "_SUCCESS")))
         throw new IllegalStateException(
           s"shallow clone $root/v$v references $target, which is missing or" +
@@ -214,9 +200,8 @@ object Warehouse {
     *  - clone-of-clone flattens: the pointer always names the
     *    ORIGINAL data directory, so chains never deepen.
     *
-    * Publication rides the commit protocol (lease, private staging,
-    * fencing, atomic rename, pointer swap) so clones serialize
-    * correctly with concurrent commits on the destination. */
+    * Publication is [[publishVersion]] on `dstRoot`, so clones
+    * serialize with concurrent commits on the destination. */
   def cloneShallow(spark: SparkSession, srcRoot: String, dstRoot: String,
       lockTtlMs: Long = DefaultLockTtlMs): Long = {
     val srcV = currentVersion(spark, srcRoot).getOrElse(
@@ -233,67 +218,17 @@ object Warehouse {
         " them); compact the source first")
     val target = dataPath(spark, srcRoot, srcV) // flattens chains + validates
     val fs = Ingest.fs(spark, dstRoot)
-    fs.mkdirs(new Path(dstRoot))
-    val lock = new Path(dstRoot, lockFile)
-    val holderId = java.util.UUID.randomUUID().toString
-    acquireLease(fs, lock, holderId, lockTtlMs)
-    var staging: Option[Path] = None
-    try {
-      val pointerAtAcquire = pointerVersion(fs, dstRoot)
-      val next = (currentVersion(spark, dstRoot).toSeq ++
-        completeSnapshots(spark, dstRoot)).maxOption.map(_ + 1).getOrElse(0L)
-      val stage = new Path(dstRoot, s".v${next}_$holderId")
-      staging = Some(stage)
-      fs.mkdirs(stage)
-      val mk = fs.create(new Path(stage, clonePointer), true)
-      try mk.write(target.getBytes(StandardCharsets.UTF_8)) finally mk.close()
+    publishVersion(spark, dstRoot, lockTtlMs, expectedCurrent = None,
+        op = "cloneShallow") { (stage, _) =>
+      writeText(fs, new Path(stage, clonePointer), target)
       // a RENAMED source version carries its names in `_MAPPING`, not
       // in the data bytes the pointer references — the clone must
       // carry the map too, or it would silently serve the PHYSICAL
       // (pre-rename) names
       val srcMap = new Path(versionPath(srcRoot, srcV), mappingFile)
-      if (srcFs.exists(srcMap)) {
-        val in = srcFs.open(srcMap)
-        val content =
-          try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-          finally in.close()
-        val out = fs.create(new Path(stage, mappingFile), true)
-        try out.write(content) finally out.close()
-      }
+      if (srcFs.exists(srcMap))
+        writeText(fs, new Path(stage, mappingFile), readText(srcFs, srcMap))
       fs.create(new Path(stage, "_SUCCESS"), true).close()
-      if (!readLease(fs, lock).exists(_.holderId == holderId))
-        throw new IllegalStateException(
-          s"cloneShallow fenced: lease on $lock was reclaimed; v$next unpublished")
-      if (pointerVersion(fs, dstRoot) != pointerAtAcquire)
-        throw new IllegalStateException(
-          s"cloneShallow fenced: $versionFile advanced past $pointerAtAcquire;" +
-            s" v$next unpublished")
-      val tgt = new Path(versionPath(dstRoot, next))
-      if (fs.exists(tgt)) {
-        if (fs.exists(new Path(tgt, "_SUCCESS")))
-          throw new IllegalStateException(
-            s"cloneShallow fenced: complete snapshot $tgt appeared during this" +
-              " clone (concurrent writer?); aborting unpublished")
-        fs.delete(tgt, true)
-      }
-      if (!fs.rename(stage, tgt))
-        throw new IllegalStateException(
-          s"cloneShallow failed: could not publish $stage as $tgt")
-      staging = None
-      val tmp = new Path(dstRoot, s".$versionFile.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(next.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        new Path(dstRoot).toUri, fs.getConf)
-      fc.rename(tmp, new Path(dstRoot, versionFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      next
-    } finally {
-      staging.foreach(s => try fs.delete(s, true)
-        catch { case _: java.io.IOException => () })
-      if (readLease(fs, lock).exists(_.holderId == holderId))
-        fs.delete(lock, false)
     }
   }
 
@@ -321,8 +256,8 @@ object Warehouse {
     * resurrect deleted rows — applyDv first; same rule as
     * [[cloneShallow]]). `renames` keys are CURRENT LOGICAL names;
     * unknown keys and target collisions fail before anything
-    * publishes. Publication rides the full commit protocol (lease,
-    * private staging, fencing, atomic rename, pointer swap). */
+    * publishes. Publication is [[publishVersion]], fenced on the
+    * version the map was derived from. */
   def renameColumns(spark: SparkSession, root: String,
       renames: Map[String, String],
       schema: org.apache.spark.sql.types.StructType = CocoaSchema.warehouse,
@@ -361,82 +296,25 @@ object Warehouse {
       s"renameColumns: rename set collides — resulting columns" +
         s" ${finalNames.mkString(", ")} are not distinct")
     val target = dataPath(spark, root, cur) // flattens clone chains + validates
-    fs.mkdirs(new Path(root))
-    val lock = new Path(root, lockFile)
-    val holderId = java.util.UUID.randomUUID().toString
-    acquireLease(fs, lock, holderId, lockTtlMs)
-    var staging: Option[Path] = None
-    try {
-      val pointerAtAcquire = pointerVersion(fs, root)
-      if (pointerAtAcquire != Some(cur))
-        throw new IllegalStateException(
-          s"renameColumns fenced: derived from v$cur but $versionFile reads" +
-            s" $pointerAtAcquire — a commit interleaved; retry")
-      val next = (currentVersion(spark, root).toSeq ++
-        completeSnapshots(spark, root)).maxOption.map(_ + 1).getOrElse(0L)
-      val stage = new Path(root, s".v${next}_$holderId")
-      staging = Some(stage)
-      fs.mkdirs(stage)
+    publishVersion(spark, root, lockTtlMs, expectedCurrent = Some(Some(cur)),
+        op = "renameColumns") { (stage, _) =>
       curManifest match {
         case Some(lines) =>
           // carry the file list, schema and partitioning VERBATIM —
           // the rename is a map on top of unchanged physical bytes
-          val mf = fs.create(new Path(stage, manifestFile), true)
-          try mf.write(lines.mkString("\n").getBytes(StandardCharsets.UTF_8))
-          finally mf.close()
-          val sc = fs.create(new Path(stage, manifestSchemaFile), true)
-          try sc.write(effectiveSchema(spark, root, cur).json
-            .getBytes(StandardCharsets.UTF_8))
-          finally sc.close()
+          writeText(fs, new Path(stage, manifestFile), lines.mkString("\n"))
+          writeText(fs, new Path(stage, manifestSchemaFile),
+            effectiveSchema(spark, root, cur).json)
           val parts = manifestParts(fs, root, cur)
-          if (parts.nonEmpty) {
-            val pf = fs.create(new Path(stage, manifestPartsFile), true)
-            try pf.write(parts.mkString("\n").getBytes(StandardCharsets.UTF_8))
-            finally pf.close()
-          }
+          if (parts.nonEmpty)
+            writeText(fs, new Path(stage, manifestPartsFile), parts.mkString("\n"))
         case None =>
-          val mk = fs.create(new Path(stage, clonePointer), true)
-          try mk.write(target.getBytes(StandardCharsets.UTF_8)) finally mk.close()
+          writeText(fs, new Path(stage, clonePointer), target)
       }
-      val mp = fs.create(new Path(stage, mappingFile), true)
-      try mp.write(composed.filter { case (p, l) => p != l }.toSeq.sorted
-        .map { case (p, l) => s"$p\t$l" }.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-      finally mp.close()
+      writeText(fs, new Path(stage, mappingFile), composed
+        .filter { case (p, l) => p != l }.toSeq.sorted
+        .map { case (p, l) => s"$p\t$l" }.mkString("\n"))
       fs.create(new Path(stage, "_SUCCESS"), true).close()
-      if (!readLease(fs, lock).exists(_.holderId == holderId))
-        throw new IllegalStateException(
-          s"renameColumns fenced: lease on $lock was reclaimed; v$next unpublished")
-      if (pointerVersion(fs, root) != pointerAtAcquire)
-        throw new IllegalStateException(
-          s"renameColumns fenced: $versionFile advanced past $pointerAtAcquire;" +
-            s" v$next unpublished")
-      val tgt = new Path(versionPath(root, next))
-      if (fs.exists(tgt)) {
-        if (fs.exists(new Path(tgt, "_SUCCESS")))
-          throw new IllegalStateException(
-            s"renameColumns fenced: complete snapshot $tgt appeared during this" +
-              " rename (concurrent writer?); aborting unpublished")
-        fs.delete(tgt, true)
-      }
-      if (!fs.rename(stage, tgt))
-        throw new IllegalStateException(
-          s"renameColumns failed: could not publish $stage as $tgt")
-      staging = None
-      val tmp = new Path(root, s".$versionFile.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(next.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        new Path(root).toUri, fs.getConf)
-      fc.rename(tmp, new Path(root, versionFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      next
-    } finally {
-      staging.foreach(s => try fs.delete(s, true)
-        catch { case _: java.io.IOException => () })
-      if (readLease(fs, lock).exists(_.holderId == holderId))
-        fs.delete(lock, false)
     }
   }
 
@@ -446,17 +324,10 @@ object Warehouse {
       root: String, v: Long): Map[String, String] = {
     val p = new Path(versionPath(root, v), mappingFile)
     if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-        finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).map { line =>
-        val Array(phys, logical) = line.split("\t", 2)
-        phys -> logical
-      }.toMap
-    }
+    else readText(fs, p).linesIterator.filter(_.nonEmpty).map { line =>
+      val Array(phys, logical) = line.split("\t", 2)
+      phys -> logical
+    }.toMap
   }
 
   /** Read version `v` (default: current) under its LOGICAL column
@@ -578,31 +449,6 @@ object Warehouse {
     base.select(cols: _*)
   }
 
-  /** Manifest version `v` with DV-addressable row identity: every
-    * schema column plus `_dv_file` (the ROOT-relative url-encoded
-    * path — manifest files span version dirs, so the plain-snapshot
-    * dataDir-relative key cannot address them) and `_dv_pos` (the
-    * row's ordinal within its file). The [[snapshotWithPos]] twin for
-    * manifest chains; [[graft.sources.v2.GraftDvScan]] derives the
-    * identical key for its merge-on-read skip. */
-  private def manifestSnapshotWithPos(spark: SparkSession, root: String,
-      v: Long, schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val fs = Ingest.fs(spark, root)
-    val h = head(spark, root, v)
-    val base = entriesFrame(spark, h, h.files, schema, withStats = true,
-      withFilePath = true, withPos = true)
-    // same last-occurrence fence as [[snapshotWithPos]], on the ROOT
-    // dir segment: only a real directory boundary can produce it
-    // (version dirs are `v\d+`, partition segments hive-escape '/')
-    val rootQ = fs.makeQualified(new Path(root)).toString.stripSuffix("/")
-    val marker = "/" + rootQ.substring(rootQ.lastIndexOf('/') + 1) + "/"
-    base
-      .withColumn("_dv_file", substring_index(col("__file"), marker, -1))
-      .withColumnRenamed("__pos", "_dv_pos")
-      .drop("__file")
-  }
-
   /** TIME-TRAVEL read of one committed version through the
     * correct-or-loud path (clone indirection resolved, listing-race
     * validated). Prefer this over raw `spark.read.parquet
@@ -661,11 +507,14 @@ object Warehouse {
     *
     * Also normalizes to declared column ORDER: a hive-partitioned
     * version ([[commitPartitioned]]) surfaces its partition columns
-    * appended last regardless of the declared schema. */
+    * appended last regardless of the declared schema. `extra` columns
+    * follow the schema's, projected directly above the scan (where
+    * `_metadata` resolves). */
   private def readData(spark: SparkSession, root: String, dir: String,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+      schema: org.apache.spark.sql.types.StructType,
+      extra: Seq[org.apache.spark.sql.Column] = Nil): DataFrame = {
     val df = spark.read.schema(schema).parquet(dir)
-      .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
+      .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq ++ extra: _*)
     if (df.inputFiles.isEmpty && !Ingest.fs(spark, root).exists(new Path(dir)))
       throw new IllegalStateException(
         s"warehouse read raced a prune: $dir vanished during file listing —" +
@@ -715,7 +564,8 @@ object Warehouse {
       expectedCurrent: Option[Option[Long]] = None,
       audit: Option[DataFrame => Unit] = None,
       partitionBy: Seq[String] = Seq.empty): Long =
-    publishVersion(spark, root, lockTtlMs, expectedCurrent) { (stage, _) =>
+    publishVersion(spark, root, lockTtlMs, expectedCurrent,
+        op = "commit") { (stage, _) =>
       val writer = df.write.mode("overwrite")
       (if (partitionBy.isEmpty) writer
        else writer.partitionBy(partitionBy: _*)).parquet(stage.toString)
@@ -730,16 +580,19 @@ object Warehouse {
         check(spark.read.schema(df.schema).parquet(stage.toString)))
     }
 
-  /** The COMMIT PROTOCOL every version publisher shares (see
-    * [[commit]]'s scaladoc for the full safety argument): lease →
-    * fence (`expectedCurrent` read-modify-write + raw-pointer pin) →
-    * `stageContent(stagingDir, next)` writes the version's content
-    * into a holder-private dot-dir → re-fence (lease still ours,
-    * pointer unmoved) → atomic no-overwrite rename to `v{next}` →
-    * atomic pointer swap. A throw anywhere aborts with the staging
-    * dir deleted and nothing published. */
+  /** The COMMIT PROTOCOL, and its only implementation: every version
+    * publisher ([[commit]], the manifest commits, [[publishStaged]],
+    * [[cloneShallow]], [[renameColumns]], [[publishSnapshotGroup]])
+    * goes through here (see [[commit]]'s scaladoc for the full safety
+    * argument): lease → fence (`expectedCurrent` read-modify-write +
+    * raw-pointer pin) → `stageContent(stagingDir, next)` writes the
+    * version's content into a holder-private dot-dir (which does not
+    * exist yet) → re-fence (lease still ours, pointer unmoved) →
+    * atomic no-overwrite rename to `v{next}` → atomic pointer swap. A
+    * throw anywhere aborts with the staging dir deleted and nothing
+    * published. `op` names the caller in every error message. */
   private def publishVersion(spark: SparkSession, root: String,
-      lockTtlMs: Long, expectedCurrent: Option[Option[Long]])(
+      lockTtlMs: Long, expectedCurrent: Option[Option[Long]], op: String)(
       stageContent: (Path, Long) => Unit): Long = {
     val fs = Ingest.fs(spark, root)
     fs.mkdirs(new Path(root))
@@ -760,7 +613,7 @@ object Warehouse {
       expectedCurrent.foreach { expected =>
         if (pointerAtAcquire != expected)
           throw new IllegalStateException(
-            s"commit fenced: caller derived its snapshot from version" +
+            s"$op fenced: caller derived its snapshot from version" +
               s" $expected but $versionFile now reads $pointerAtAcquire —" +
               " a commit interleaved; re-derive and retry")
       }
@@ -778,12 +631,12 @@ object Warehouse {
       // crashed and may be mid-commit itself).
       if (!readLease(fs, lock).exists(_.holderId == holderId))
         throw new IllegalStateException(
-          s"commit fenced: lease on $lock was reclaimed (this committer" +
+          s"$op fenced: lease on $lock was reclaimed (this committer" +
             s" stalled past the ${lockTtlMs}ms TTL); snapshot v$next left" +
             " unpublished")
       if (pointerVersion(fs, root) != pointerAtAcquire)
         throw new IllegalStateException(
-          s"commit fenced: $versionFile advanced past $pointerAtAcquire" +
+          s"$op fenced: $versionFile advanced past $pointerAtAcquire" +
             s" during this commit; snapshot v$next left unpublished")
       // Publish the snapshot: atomic rename, NO overwrite. Under the
       // lease only this holder targets v{next}; a leftover v{next}
@@ -794,22 +647,15 @@ object Warehouse {
       if (fs.exists(target)) {
         if (fs.exists(new Path(target, "_SUCCESS")))
           throw new IllegalStateException(
-            s"commit fenced: complete snapshot $target appeared during this" +
+            s"$op fenced: complete snapshot $target appeared during this" +
               " commit (concurrent writer?); aborting unpublished")
         fs.delete(target, true)
       }
       if (!fs.rename(stage, target))
         throw new IllegalStateException(
-          s"commit failed: could not publish $stage as $target")
+          s"$op failed: could not publish $stage as $target")
       staging = None
-      val tmp = new Path(root, s".$versionFile.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(next.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        new Path(root).toUri, fs.getConf)
-      fc.rename(tmp, new Path(root, versionFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+      replaceText(fs, new Path(root), versionFile, next.toString)
       next
     } finally {
       staging.foreach(s => try fs.delete(s, true)
@@ -894,12 +740,7 @@ object Warehouse {
     val hit = manifestCache.get(key)
     if (hit != null && hit._1 == st.getLen && hit._2 == st.getModificationTime)
       return Some(hit._3)
-    val in = fs.open(p)
-    val txt =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()
-    val lines = txt.linesIterator.filter(_.nonEmpty).toSeq
+    val lines = readText(fs, p).linesIterator.filter(_.nonEmpty).toSeq
     if (manifestCacheBytes.addAndGet(st.getLen) > ManifestCacheMaxBytes) {
       manifestCache.clear()
       manifestCacheBytes.set(st.getLen)
@@ -922,14 +763,7 @@ object Warehouse {
       v: Long): Seq[String] = {
     val p = new Path(versionPath(root, v), manifestPartsFile)
     if (!fs.exists(p)) Seq.empty
-    else {
-      val in = fs.open(p)
-      val txt =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-        finally in.close()
-      txt.linesIterator.filter(_.nonEmpty).toSeq
-    }
+    else readText(fs, p).linesIterator.filter(_.nonEmpty).toSeq
   }
 
   /** The hive partition columns of version `v`, whatever its kind:
@@ -1185,12 +1019,7 @@ object Warehouse {
     else {
       val p = new Path(versionPath(root, v), manifestSchemaFile)
       if (fs.exists(p)) {
-        val in = fs.open(p)
-        val txt =
-          try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-            StandardCharsets.UTF_8)
-          finally in.close()
-        val parsed = org.apache.spark.sql.types.DataType.fromJson(txt)
+        val parsed = org.apache.spark.sql.types.DataType.fromJson(readText(fs, p))
           .asInstanceOf[org.apache.spark.sql.types.StructType]
         // NULLABLE-RELAXED, the same rule parquet reads and
         // DataFrameReader.schema() apply: a widened chain's older
@@ -1287,6 +1116,24 @@ object Warehouse {
     val out = fs.create(p, true)
     try out.write(text.getBytes(StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  private def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+      StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** Replace `dir/name` with `text` atomically: write a `.name.tmp`
+    * sibling, then `FileContext.rename(OVERWRITE)` — readers see the
+    * old content or the new, never a missing or torn file. */
+  private def replaceText(fs: FileSystem, dir: Path, name: String,
+      text: String): Unit = {
+    val tmp = new Path(dir, s".$name.tmp")
+    writeText(fs, tmp, text)
+    org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, fs.getConf)
+      .rename(tmp, new Path(dir, name), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
   /** Version `v`'s persisted per-file data-skipping stats: absolute
@@ -1424,7 +1271,7 @@ object Warehouse {
     val fs = Ingest.fs(spark, root)
     val p2l = base.fold(Map.empty[String, String])(_.p2l)
     publishVersion(spark, root, lockTtlMs,
-        expectedCurrent = Some(base.map(_.version))) { (stage, next) =>
+        expectedCurrent = Some(base.map(_.version)), op = "commit") { (stage, next) =>
       val df = renameCols(rows, p2l.map(_.swap))
       val stats = new org.apache.spark.sql.graftbridge.FileStatsTracker(
         df.schema, parts, schema)
@@ -1634,24 +1481,23 @@ object Warehouse {
 
   /** Publish an ALREADY-STAGED snapshot directory as the next version.
     *
-    * This is the lease/fence/rename/pointer half of [[commit]] split
-    * out for callers whose data plane is not a DataFrame handed to the
-    * driver — specifically the connector's V2 row-level writes
-    * ([[graft.sources.v2.GraftReplaceBatchWrite]]), where EXECUTORS
-    * write the replacement snapshot through Spark's builtin parquet
-    * `FileBatchWrite` into a private dot-prefixed dir under `root`,
-    * and only then does the driver publish it. At 100 TB this split is
-    * the only shape that works: the publish step moves metadata (one
-    * directory rename + pointer swap), never data.
+    * [[publishVersion]] for callers whose data plane is not a
+    * DataFrame handed to the driver — specifically the connector's V2
+    * row-level writes ([[graft.sources.v2.GraftReplaceBatchWrite]]),
+    * where EXECUTORS write the replacement snapshot through Spark's
+    * builtin parquet `FileBatchWrite` into a private dot-prefixed dir
+    * under `root`, and only then does the driver publish it. At 100 TB
+    * this split is the only shape that works: the publish step moves
+    * metadata (directory renames + pointer swap), never data.
     *
-    * Protocol properties are [[commit]]'s, with the staging write
-    * hoisted before the lease instead of inside it — safe because the
-    * staged dir is holder-private (UUID-named, dot-prefixed: invisible
-    * to [[completeSnapshots]] and to readers) so nothing is shared
-    * until the fenced rename. `expectedCurrent` MUST carry the version
-    * the staged data was derived from: a row-level write is always a
-    * read-modify-write, and publishing over an interleaved commit
-    * would silently drop its rows — the fence aborts loudly instead.
+    * The staging write happens before the lease — safe because the
+    * staged dir is caller-private (dot-prefixed: invisible to
+    * [[completeSnapshots]] and to readers); under the lease it is
+    * renamed into the protocol's own staging dir. `expectedCurrent`
+    * MUST carry the version the staged data was derived from: a
+    * row-level write is always a read-modify-write, and publishing
+    * over an interleaved commit would silently drop its rows — the
+    * fence aborts loudly instead.
     *
     * The staged dir must carry `_SUCCESS` (the V2 file committer
     * writes it at job commit) — publishing a half-written snapshot is
@@ -1662,62 +1508,25 @@ object Warehouse {
       expectedCurrent: Option[Option[Long]] = None,
       lockTtlMs: Long = DefaultLockTtlMs): Long = {
     val fs = Ingest.fs(spark, root)
-    val stage = new Path(stagedDir)
-    require(stage.getParent == new Path(root) &&
-      stage.getName.startsWith("."),
+    val staged = new Path(stagedDir)
+    require(staged.getParent == new Path(root) &&
+      staged.getName.startsWith("."),
       s"graft: staged snapshot must be a dot-prefixed dir directly under" +
         s" $root, got $stagedDir")
-    var cleanup = true
-    val lock = new Path(root, lockFile)
-    val holderId = java.util.UUID.randomUUID().toString
     try {
-      require(fs.exists(new Path(stage, "_SUCCESS")),
+      require(fs.exists(new Path(staged, "_SUCCESS")),
         s"graft: staged snapshot $stagedDir has no _SUCCESS marker —" +
           " refusing to publish a half-written directory")
-      acquireLease(fs, lock, holderId, lockTtlMs)
-      try {
-        val pointerAtAcquire = pointerVersion(fs, root)
-        expectedCurrent.foreach { expected =>
-          if (pointerAtAcquire != expected)
-            throw new IllegalStateException(
-              s"publish fenced: staged snapshot was derived from version" +
-                s" $expected but $versionFile now reads $pointerAtAcquire —" +
-                " a commit interleaved; re-derive and retry")
-        }
-        val next = (currentVersion(spark, root).toSeq ++
-          completeSnapshots(spark, root)).maxOption.map(_ + 1).getOrElse(0L)
-        if (!readLease(fs, lock).exists(_.holderId == holderId))
+      publishVersion(spark, root, lockTtlMs, expectedCurrent,
+          op = "publish") { (stage, _) =>
+        if (!fs.rename(staged, stage))
           throw new IllegalStateException(
-            s"publish fenced: lease on $lock was reclaimed; staged snapshot" +
-              " left unpublished")
-        val target = new Path(versionPath(root, next))
-        if (fs.exists(target)) {
-          if (fs.exists(new Path(target, "_SUCCESS")))
-            throw new IllegalStateException(
-              s"publish fenced: complete snapshot $target appeared during" +
-                " this publish (concurrent writer?); aborting")
-          fs.delete(target, true)
-        }
-        if (!fs.rename(stage, target))
-          throw new IllegalStateException(
-            s"publish failed: could not rename $stage to $target")
-        cleanup = false
-        val tmp = new Path(root, s".$versionFile.tmp")
-        val out = fs.create(tmp, true)
-        try out.write(next.toString.getBytes(StandardCharsets.UTF_8))
-        finally out.close()
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          new Path(root).toUri, fs.getConf)
-        fc.rename(tmp, new Path(root, versionFile),
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-        next
-      } finally {
-        if (readLease(fs, lock).exists(_.holderId == holderId))
-          fs.delete(lock, false)
+            s"publish failed: could not rename $staged to $stage")
       }
-    } finally {
-      if (cleanup) try fs.delete(stage, true)
-      catch { case _: java.io.IOException => () }
+    } catch {
+      case t: Throwable =>
+        try fs.delete(staged, true) catch { case _: java.io.IOException => () }
+        throw t
     }
   }
 
@@ -1829,51 +1638,16 @@ object Warehouse {
       schema: org.apache.spark.sql.types.StructType,
       applyDvs: Boolean = true, eraOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fs = Ingest.fs(spark, root)
     val l2p = eraL2P(spark, root, v, eraOf.getOrElse(v), schema.fieldNames.toSeq)
     val phys = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
       f.copy(name = l2p.getOrElse(f.name, f.name))))
-    // MANIFEST versions: the read is the file list; a rename LATER in
-    // the walk still translates (l2p covers it). DVs compose since
-    // round 13 — applied by the same anti-join as the plain branch
-    // (and skipped for applyDvs=false callers: feed purity).
-    if (manifestOf(fs, root, v).isDefined) {
-      val onDisk = effectiveSchema(spark, root, v).fieldNames.toSet
-      val missing = phys.fieldNames.filterNot(onDisk.contains)
-      // RENAME-signature guard only (missing AND an unclaimed extra):
-      // a missing column with no unclaimed counterpart is the legal
-      // ADD-COLUMNS widening, whose null-fill IS the contract
-      if (missing.nonEmpty && (onDisk -- phys.fieldNames).nonEmpty)
-        throw new IllegalStateException(
-          s"liveEraSnap: manifest version v$v of $root has no column(s)" +
-            s" ${missing.mkString(", ")} under era-v${eraOf.getOrElse(v)}" +
-            " logical names — rename chain untranslatable or the caller's" +
-            " schema is from a different era")
-      val live = dvFrame(spark, root, v).filter(_ => applyDvs) match {
-        case None => readSnapshot(spark, root, v, phys)
-        case Some(dv0) =>
-          val dvBytes = dvPartDirs(fs, root, v)
-            .map(p => fs.getContentSummary(p).getLength).sum
-          val dv = if (dvBytes <= 32L * 1024 * 1024) broadcast(dv0) else dv0
-          val base = manifestSnapshotWithPos(spark, root, v, phys)
-          base.join(dv,
-              base("_dv_file") === dv("file") && base("_dv_pos") === dv("pos"),
-              "left_anti")
-            .drop("_dv_file", "_dv_pos")
-      }
-      return (
-        if (l2p.isEmpty) live
-        else live.select(schema.fieldNames.toSeq
-          .map(n => col(s"`${l2p.getOrElse(n, n)}`").as(n)): _*))
-    }
     // loud null-fill guard with the RENAME signature (a pinned column
     // missing from the files WHILE the files carry an unclaimed one):
     // an untranslated rename would null-fill silently. Missing-only is
     // the legal ADD-COLUMNS widening — reading a pre-widening version
     // under the widened schema null-fills the new columns BY CONTRACT
     // (diff/feeds across a widening boundary must keep working).
-    val onDisk = spark.read.parquet(dataPath(spark, root, v))
-      .schema.fieldNames.toSet
+    val onDisk = effectiveSchema(spark, root, v).fieldNames.toSet
     val missing = phys.fieldNames.filterNot(onDisk.contains)
     if (missing.nonEmpty && (onDisk -- phys.fieldNames).nonEmpty)
       throw new IllegalStateException(
@@ -1881,32 +1655,16 @@ object Warehouse {
           s" ${missing.mkString(", ")} under era-v${eraOf.getOrElse(v)}" +
           " logical names — rename chain untranslatable (vacuumed rename" +
           " version?) or the caller's schema is from a different era")
-    val raw = snapshotWithPos(spark, root, v, phys)
-    // same silent-empty-listing guard as [[readData]]: a reader racing
-    // a vacuum must fail loudly, never return zero rows
-    if (raw.inputFiles.isEmpty &&
-        !fs.exists(new Path(dataPath(spark, root, v))))
-      throw new IllegalStateException(
-        s"liveEraSnap read raced a prune: v$v of $root vanished during" +
-          " file listing — re-resolve the version and retry")
-    val live = dvFrame(spark, root, v).filter(_ => applyDvs) match {
-      case None => raw.drop("_dv_file", "_dv_pos")
-      case Some(dv0) =>
-        val dvBytes = dvPartDirs(fs, root, v)
-          .map(p => fs.getContentSummary(p).getLength).sum
-        val dv = if (dvBytes <= 32L * 1024 * 1024) broadcast(dv0) else dv0
-        raw.join(dv,
-            raw("_dv_file") === dv("file") && raw("_dv_pos") === dv("pos"),
-            "left_anti")
-          .drop("_dv_file", "_dv_pos")
-    }
+    // manifest or plain, the read resolves the version's own file set;
+    // applyDvs=false callers skip the vectors (feed purity)
+    val live =
+      if (applyDvs) readLive(spark, root, v, phys)
+      else readSnapshot(spark, root, v, phys)
     // normalize to DECLARED order even with no rename map: a
     // hive-partitioned dir read surfaces partition columns appended
     // last, and a feed diff against a declared-order side would
     // refuse (column sets equal, orders not)
-    if (l2p.isEmpty) live.select(schema.fieldNames.toSeq
-      .map(n => col(s"`$n`")): _*)
-    else live.select(schema.fieldNames.toSeq
+    live.select(schema.fieldNames.toSeq
       .map(n => col(s"`${l2p.getOrElse(n, n)}`").as(n)): _*)
   }
 
@@ -2116,21 +1874,12 @@ object Warehouse {
       throw new IllegalStateException(
         s"restore: no complete snapshot v$toVersion under $root" +
           " (vacuumed past the retention floor?)")
-    // MANIFEST versions restore through the file-list read — a raw dir
+    // MANIFEST versions restore through the file-list read, their
+    // vectors keyed root-relative ([[snapshotWithPos]]) — a raw dir
     // read would silently drop every carried-by-reference row and
     // COMMIT the partial result as the new current version
-    val base = readSnapshot(spark, root, toVersion, schema)
-    val content = dvFrame(spark, root, toVersion) match {
-      case None => base
-      case Some(dv) =>
-        import org.apache.spark.sql.functions._
-        val withPos = snapshotWithPos(spark, root, toVersion, schema)
-        withPos.join(dv,
-            withPos("_dv_file") === dv("file") && withPos("_dv_pos") === dv("pos"),
-            "left_anti")
-          .drop("_dv_file", "_dv_pos")
-    }
-    commit(spark, root, content, lockTtlMs, expectedCurrent = Some(Some(cur)))
+    commit(spark, root, readLive(spark, root, toVersion, schema), lockTtlMs,
+      expectedCurrent = Some(Some(cur)))
   }
 
   // ------------------------------------------------------------------
@@ -2144,36 +1893,86 @@ object Warehouse {
     org.apache.spark.sql.types.StructField("file", org.apache.spark.sql.types.StringType, nullable = false),
     org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** The current snapshot with each row's PHYSICAL identity attached:
-    * `_dv_file` (the part-file path RELATIVE to the snapshot's data
-    * dir — stable across a snapshot-dir move, unlike the full URI, and
-    * unique where the bare NAME is not: a hive-partitioned write
-    * reuses the same `part-NNNNN-<jobUUID>` file name across
-    * partition directories, so a name-only key would alias rows of
-    * different partitions) and `_dv_pos` (the row's ordinal within
-    * that file, from the parquet reader's `_metadata.row_index`).
-    * (file, pos) is the row-id deletion vectors address — no key
-    * column needed, so DV deletes work on keyless tables too. On flat
-    * snapshots the relative path IS the file name, so this key is
-    * byte-identical to the historical one there. */
+  /** Version `v` with each row's PHYSICAL identity attached — the
+    * (file, pos) row id deletion vectors address, so DV deletes need no
+    * key column and work on keyless tables too:
+    *  - `_dv_file`: a PLAIN version keys files RELATIVE to its data dir
+    *    (stable across a snapshot-dir move, unlike the full URI, and
+    *    unique where the bare NAME is not: a hive-partitioned write
+    *    reuses the same `part-NNNNN-<jobUUID>` file name across
+    *    partition directories; on flat snapshots the relative path IS
+    *    the file name). A MANIFEST version keys them relative to the
+    *    ROOT — its files span version dirs, so a data-dir-relative key
+    *    cannot address them;
+    *  - `_dv_pos`: the row's ordinal within its file, from the parquet
+    *    reader's `_metadata.row_index`.
+    * `_metadata.file_path` is the url-encoded URI ("file:/…",
+    * partition segments like "region=Bono%20East") while the dir is a
+    * raw path, so the key is cut at the LAST occurrence of the
+    * slash-fenced dir segment ("/v<N>/" or "/<root>/"), which only
+    * real directory boundaries can produce (partition segments are
+    * always "k=v" with '/' hive-escaped) — never by a length count.
+    * The key stays URL-ENCODED; [[graft.sources.v2.GraftDvScan]]
+    * derives the identical key via SparkPath. */
   private def snapshotWithPos(spark: SparkSession, root: String, v: Long,
       schema: org.apache.spark.sql.types.StructType): DataFrame = {
     import org.apache.spark.sql.functions._
-    val dir = dataPath(spark, root, v).stripSuffix("/")
-    // `_metadata.file_path` is the url-encoded URI ("file:/…",
-    // partition segments like "region=Bono%20East"); the data dir is
-    // a raw path — so strip by the LAST occurrence of the
-    // slash-fenced version-dir segment ("/v<N>/"), which only real
-    // directory boundaries can produce (partition segments are always
-    // "k=v" with '/' hive-escaped), never by a length count. The key
-    // stays in the URL-ENCODED form; [[graft.sources.v2.GraftDvScan]]
-    // computes the identical key via SparkPath. */
-    val marker = "/" + dir.substring(dir.lastIndexOf('/') + 1) + "/"
-    spark.read.schema(schema).parquet(dir)
-      .select(col("*"),
-        substring_index(col("_metadata.file_path"), marker, -1).as("_dv_file"),
-        col("_metadata.row_index").as("_dv_pos"))
+    val fs = Ingest.fs(spark, root)
+    def fenced(dir: String) = "/" + dir.substring(dir.lastIndexOf('/') + 1) + "/"
+    if (manifestOf(fs, root, v).isDefined) {
+      val h = head(spark, root, v)
+      val marker = fenced(fs.makeQualified(new Path(root)).toString.stripSuffix("/"))
+      entriesFrame(spark, h, h.files, schema, withStats = true,
+          withFilePath = true, withPos = true)
+        .withColumn("_dv_file", substring_index(col("__file"), marker, -1))
+        .withColumnRenamed("__pos", "_dv_pos")
+        .drop("__file")
+    } else {
+      val dir = dataPath(spark, root, v).stripSuffix("/")
+      readData(spark, root, dir, schema, Seq(
+        substring_index(col("_metadata.file_path"), fenced(dir), -1).as("_dv_file"),
+        col("_metadata.row_index").as("_dv_pos")))
+    }
   }
+
+  /** The merge-on-read anti-join, written once: `withPos` (a
+    * [[snapshotWithPos]] frame of version `v`) minus the rows `dv`
+    * (`v`'s [[dvFrame]]) addresses, identity columns kept. The DV side
+    * is hinted broadcast while its on-disk footprint stays under
+    * `broadcastDvMaxBytes` (one driver metadata listing — no job), so
+    * the join adds NO shuffle of the data; past the bound it plans as
+    * a regular shuffled anti join — correct at any DV size, and
+    * [[applyDv]] is the maintenance valve either way. */
+  private def withoutDeleted(spark: SparkSession, root: String, v: Long,
+      withPos: DataFrame, dv: DataFrame,
+      broadcastDvMaxBytes: Long = DvBroadcastMaxBytes): DataFrame = {
+    // size ONLY the complete d_* parts the read consumes — a whole-dir
+    // content summary would also count in-flight `.stage_d_*` staging
+    // dirs from concurrent deleteWhere calls
+    val side =
+      if (dvOnDiskBytes(spark, root, v) <= broadcastDvMaxBytes)
+        org.apache.spark.sql.functions.broadcast(dv)
+      else dv
+    withPos.join(side,
+      withPos("_dv_file") === side("file") && withPos("_dv_pos") === side("pos"),
+      "left_anti")
+  }
+
+  private val DvBroadcastMaxBytes: Long = 32L * 1024 * 1024
+
+  /** Version `v`'s LIVE rows under `schema`: its deletion vectors
+    * applied when it has any ([[withoutDeleted]] over the
+    * manifest-or-plain [[snapshotWithPos]]), else the plain
+    * [[readSnapshot]]. */
+  private def readLive(spark: SparkSession, root: String, v: Long,
+      schema: org.apache.spark.sql.types.StructType,
+      broadcastDvMaxBytes: Long = DvBroadcastMaxBytes): DataFrame =
+    dvFrame(spark, root, v) match {
+      case None => readSnapshot(spark, root, v, schema)
+      case Some(dv) =>
+        withoutDeleted(spark, root, v, snapshotWithPos(spark, root, v, schema),
+          dv, broadcastDvMaxBytes).drop("_dv_file", "_dv_pos")
+    }
 
   /** Paths of all COMPLETE deletion-vector part dirs for snapshot `v`
     * (each `d_{uuid}` published by one [[deleteWhere]] call). Excludes
@@ -2279,15 +2078,9 @@ object Warehouse {
       s"deleteWhere: $root v$v is a RENAMED manifest chain — merge-on-read" +
         " vectors address physical names; use deleteWhereFiles (translates)" +
         " or compact first")
-    val base =
-      if (isManifest) manifestSnapshotWithPos(spark, root, v, schema)
-      else snapshotWithPos(spark, root, v, schema)
-    val live = dvFrame(spark, root, v) match {
-      case Some(dv) => base.join(dv,
-        base("_dv_file") === dv("file") && base("_dv_pos") === dv("pos"),
-        "left_anti")
-      case None => base
-    }
+    val base = snapshotWithPos(spark, root, v, schema)
+    val live = dvFrame(spark, root, v)
+      .fold(base)(withoutDeleted(spark, root, v, base, _))
     val doomed = live.filter(predicate)
       .select(col("_dv_file").as("file"), col("_dv_pos").as("pos"))
     publishDvPart(spark, root, v, doomed)
@@ -2324,43 +2117,19 @@ object Warehouse {
   }
 
   /** Read the current snapshot with its deletion vectors APPLIED — the
-    * merge-on-read path. The big side streams straight off the parquet
-    * scan; the DV side is the union of KB-scale position lists, hinted
-    * broadcast while its on-disk footprint stays under
-    * `broadcastDvMaxBytes` (one driver metadata listing — no job), so
-    * the anti join adds NO shuffle of the data. Past the bound the
-    * hint is dropped and the join plans as a regular shuffled anti
-    * join — correct at any DV size; [[applyDv]] is the maintenance op
-    * that folds an overgrown DV set back into a clean snapshot. */
+    * merge-on-read path: the big side streams straight off the parquet
+    * scan, the DV side (KB-scale position lists) joins broadcast while
+    * it stays under `broadcastDvMaxBytes` ([[withoutDeleted]]);
+    * [[applyDv]] is the maintenance op that folds an overgrown DV set
+    * back into a clean snapshot. */
   def readWithDv(spark: SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType = CocoaSchema.warehouse,
-      broadcastDvMaxBytes: Long = 32L * 1024 * 1024): DataFrame = {
-    import org.apache.spark.sql.functions._
+      broadcastDvMaxBytes: Long = DvBroadcastMaxBytes): DataFrame =
     currentVersion(spark, root) match {
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case Some(v) => dvFrame(spark, root, v) match {
-        case None => readSnapshot(spark, root, v, schema)
-        case Some(dv0) =>
-          val fs = Ingest.fs(spark, root)
-          // Size ONLY the complete d_* parts the read consumes — a
-          // whole-dir content summary would also count in-flight
-          // `.stage_d_*` staging dirs from concurrent deleteWhere
-          // calls and overstate the broadcast side.
-          val dvBytes = dvPartDirs(fs, root, v)
-            .map(p => fs.getContentSummary(p).getLength).sum
-          val dv = if (dvBytes <= broadcastDvMaxBytes) broadcast(dv0) else dv0
-          val base =
-            if (manifestOf(fs, root, v).isDefined)
-              manifestSnapshotWithPos(spark, root, v, schema)
-            else snapshotWithPos(spark, root, v, schema)
-          base.join(dv,
-              base("_dv_file") === dv("file") && base("_dv_pos") === dv("pos"),
-              "left_anti")
-            .drop("_dv_file", "_dv_pos")
-      }
+      case Some(v) => readLive(spark, root, v, schema, broadcastDvMaxBytes)
     }
-  }
 
   /** Fold the current snapshot's deletion vectors into a NEW committed
     * version (merge-on-read → copy-on-write): the rewrite [[deleteWhere]]
@@ -2389,25 +2158,6 @@ object Warehouse {
       }
     }
 
-  /** Drop old snapshots, subject to a RETENTION FLOOR — the contract
-    * that keeps "held readers survive new commits" (and p05-style time
-    * travel) true in the presence of maintenance:
-    *
-    *  - the `keepLast` newest committed snapshots are never dropped
-    *    (default 2: current + the one a just-superseded reader may
-    *    still hold — a reader that resolved `_VERSION` right before a
-    *    commit reads v_{n-1} while v_n publishes);
-    *  - nothing younger than `minAgeMs` is dropped, whatever its
-    *    position — size this above the longest-running reader job so
-    *    age alone protects any frame resolved within the window;
-    *  - snapshots ABOVE the committed pointer are never touched: they
-    *    belong to an in-flight concurrent committer.
-    *
-    * The reference needs no vacuum because Postgres MVCC ages out old
-    * row versions under the same kind of horizon (oldest active
-    * transaction); `keepLast`/`minAgeMs` are that horizon made
-    * explicit. Time travel ([[versionPath]]) is only guaranteed within
-    * the retention floor — a pruned version fails loudly at read. */
   /** COMPACTION: rewrite the current snapshot into ~`targetFileBytes`
     * files and commit the rewrite as a NEW version — the small-file
     * maintenance op every long-lived warehouse needs (a year of daily
@@ -2741,11 +2491,7 @@ object Warehouse {
     val p = new Path(branchRoot, mergeBaseFile)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val txt =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8).trim
-        finally in.close()
+      val txt = readText(fs, p).trim
       txt.split("\t", 3) match {
         case Array(bv, mv, root) => Some((bv.toLong, mv.toLong, root))
         case _ => throw new IllegalStateException(
@@ -2757,16 +2503,9 @@ object Warehouse {
   }
 
   private def writeMergeBase(fs: FileSystem, branchRoot: String,
-      branchV: Long, mainV: Long, mainRoot: String): Unit = {
-    val tmp = new Path(branchRoot, s".$mergeBaseFile.tmp")
-    val out = fs.create(tmp, true)
-    try out.write(s"$branchV\t$mainV\t$mainRoot".getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(branchRoot).toUri, fs.getConf)
-    fc.rename(tmp, new Path(branchRoot, mergeBaseFile),
-      org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      branchV: Long, mainV: Long, mainRoot: String): Unit =
+    replaceText(fs, new Path(branchRoot), mergeBaseFile,
+      s"$branchV\t$mainV\t$mainRoot")
 
   /** CONSISTENT SNAPSHOT GROUPS — a cross-table read boundary on
     * plain files: one atomic pointer pinning a (table → version) set
@@ -2780,9 +2519,8 @@ object Warehouse {
     * (member versions are immutable snapshots; the group file is one
     * atomic rename).
     *
-    * Publication rides the same machinery as [[commit]] scoped to the
-    * group dir: lease, staged write, fencing, atomic rename, pointer
-    * swap. Members are resolved to their CURRENT versions at publish;
+    * Publication is [[publishVersion]] on the group dir. Members are
+    * resolved to their CURRENT versions at publish;
     * [[readGroupMember]] reads the PINNED version and fails loudly if
     * retention has pruned it ([[vacuum]]'s keepLast must cover live
     * groups — the same operational rule shallow clones document). */
@@ -2798,57 +2536,11 @@ object Warehouse {
         (name, root, v)
     }
     val fs = Ingest.fs(spark, groupDir)
-    fs.mkdirs(new Path(groupDir))
-    val lock = new Path(groupDir, lockFile)
-    val holderId = java.util.UUID.randomUUID().toString
-    acquireLease(fs, lock, holderId, lockTtlMs)
-    var staging: Option[Path] = None
-    try {
-      val pointerAtAcquire = pointerVersion(fs, groupDir)
-      val next = (currentVersion(spark, groupDir).toSeq ++
-        completeSnapshots(spark, groupDir)).maxOption.map(_ + 1).getOrElse(0L)
-      val stage = new Path(groupDir, s".v${next}_$holderId")
-      staging = Some(stage)
-      fs.mkdirs(stage)
-      val mf = fs.create(new Path(stage, "_MEMBERS"), true)
-      try mf.write(resolved
-        .map { case (n, r, v) => s"$n\t$r\t$v" }.mkString("\n")
-        .getBytes(StandardCharsets.UTF_8))
-      finally mf.close()
+    publishVersion(spark, groupDir, lockTtlMs, expectedCurrent = None,
+        op = "snapshot group") { (stage, _) =>
+      writeText(fs, new Path(stage, "_MEMBERS"),
+        resolved.map { case (n, r, v) => s"$n\t$r\t$v" }.mkString("\n"))
       fs.create(new Path(stage, "_SUCCESS"), true).close()
-      if (!readLease(fs, lock).exists(_.holderId == holderId))
-        throw new IllegalStateException(
-          s"snapshot group fenced: lease on $lock was reclaimed; v$next unpublished")
-      if (pointerVersion(fs, groupDir) != pointerAtAcquire)
-        throw new IllegalStateException(
-          s"snapshot group fenced: $versionFile advanced past $pointerAtAcquire;" +
-            s" v$next unpublished")
-      val tgt = new Path(versionPath(groupDir, next))
-      if (fs.exists(tgt)) {
-        if (fs.exists(new Path(tgt, "_SUCCESS")))
-          throw new IllegalStateException(
-            s"snapshot group fenced: complete snapshot $tgt appeared during" +
-              " this publish (concurrent writer?); aborting unpublished")
-        fs.delete(tgt, true)
-      }
-      if (!fs.rename(stage, tgt))
-        throw new IllegalStateException(
-          s"snapshot group publish failed: could not publish $stage as $tgt")
-      staging = None
-      val tmp = new Path(groupDir, s".$versionFile.tmp")
-      val out = fs.create(tmp, true)
-      try out.write(next.toString.getBytes(StandardCharsets.UTF_8))
-      finally out.close()
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        new Path(groupDir).toUri, fs.getConf)
-      fc.rename(tmp, new Path(groupDir, versionFile),
-        org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      next
-    } finally {
-      staging.foreach(s => try fs.delete(s, true)
-        catch { case _: java.io.IOException => () })
-      if (readLease(fs, lock).exists(_.holderId == holderId))
-        fs.delete(lock, false)
     }
   }
 
@@ -2860,16 +2552,11 @@ object Warehouse {
     val v = currentVersion(spark, groupDir).getOrElse(
       throw new IllegalStateException(
         s"no published snapshot group under $groupDir"))
-    val p = new Path(versionPath(groupDir, v), "_MEMBERS")
-    val in = fs.open(p)
-    val txt =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()
-    txt.linesIterator.filter(_.nonEmpty).map { line =>
-      val Array(name, root, ver) = line.split("\t", 3)
-      name -> (root, ver.toLong)
-    }.toMap
+    readText(fs, new Path(versionPath(groupDir, v), "_MEMBERS"))
+      .linesIterator.filter(_.nonEmpty).map { line =>
+        val Array(name, root, ver) = line.split("\t", 3)
+        name -> (root, ver.toLong)
+      }.toMap
   }
 
   /** Read one member THROUGH the group's pin — the version the group
@@ -2890,7 +2577,27 @@ object Warehouse {
     readSnapshot(spark, root, v, schema)
   }
 
-  /** `lockTtlMs` bounds the crashed-publisher sweep: a dot-prefixed
+  /** Drop old snapshots, subject to a RETENTION FLOOR — the contract
+    * that keeps "held readers survive new commits" (and p05-style time
+    * travel) true in the presence of maintenance:
+    *
+    *  - the `keepLast` newest committed snapshots are never dropped
+    *    (default 2: current + the one a just-superseded reader may
+    *    still hold — a reader that resolved `_VERSION` right before a
+    *    commit reads v_{n-1} while v_n publishes);
+    *  - nothing younger than `minAgeMs` is dropped, whatever its
+    *    position — size this above the longest-running reader job so
+    *    age alone protects any frame resolved within the window;
+    *  - snapshots ABOVE the committed pointer are never touched: they
+    *    belong to an in-flight concurrent committer.
+    *
+    * The reference needs no vacuum because Postgres MVCC ages out old
+    * row versions under the same kind of horizon (oldest active
+    * transaction); `keepLast`/`minAgeMs` are that horizon made
+    * explicit. Time travel ([[versionPath]]) is only guaranteed within
+    * the retention floor — a pruned version fails loudly at read.
+    *
+    * `lockTtlMs` bounds the crashed-publisher sweep: a dot-prefixed
     * sidecar staging dir is only collected once older than
     * max(minAgeMs, lockTtlMs) — deployments whose publishers hold
     * longer leases (big diffs, slow stores) pass the SAME TTL they

@@ -169,4 +169,25 @@ class ManifestDvSpec extends AnyFunSuite {
     }
     assert(e.getMessage.contains("deleteWhereFiles"))
   }
+
+  test("restore of a manifest version with vectors commits exactly its live rows") {
+    val root = freshRoot()
+    Warehouse.commit(spark, root, batch(15, n = 80).repartition(4))
+    val v1 = Warehouse.appendFiles(spark, root, batch(16, n = 20, idOffset = 900))
+    val doomed = ids(Warehouse.read(spark, root)
+      .filter(col("quality_score") < lit(8.0)))
+    assert(Warehouse.deleteWhere(spark, root,
+      col("quality_score") < lit(8.0)) === doomed.size)
+    assert(doomed.nonEmpty)
+    val liveV1 = rows(Warehouse.readWithDv(spark, root))
+    Warehouse.applyDv(spark, root)
+    Warehouse.commit(spark, root, batch(17, n = 10, idOffset = 1000))
+    val restored = Warehouse.restore(spark, root, v1)
+    assert(Warehouse.currentVersion(spark, root) === Some(restored))
+    val now = Warehouse.read(spark, root)
+    // every carried file's live rows come back (the v1 dir alone holds
+    // only the appended 20), and no vectored row resurrects
+    assert(ids(now).intersect(doomed).isEmpty, "deleted rows came back")
+    assert(rows(now) === liveV1)
+  }
 }

@@ -411,4 +411,86 @@ class WarehouseCommitSpec extends AnyFunSuite {
     assert(hfs(outside).exists(new Path(outside)),
       "a refused foreign path must never be deleted")
   }
+
+  // ----------------------------------- one protocol, five publishers
+
+  /** A version publisher under test: `setup` builds a fresh table and
+    * returns the root whose `_COMMIT_LOCK` the publish takes, plus the
+    * publish itself. */
+  private case class Publisher(name: String, setup: () => (String, () => Long))
+
+  private val publishers = Seq(
+    Publisher("commit", () => {
+      val root = freshRoot()
+      (root, () => Warehouse.commit(spark, root, batch(70)))
+    }),
+    Publisher("publishStaged", () => {
+      val root = freshRoot()
+      val stage = stageDir(root, batch(71))
+      (root, () => Warehouse.publishStaged(spark, root, stage))
+    }),
+    Publisher("cloneShallow", () => {
+      val src = freshRoot()
+      Warehouse.commit(spark, src, batch(72))
+      val dst = freshRoot()
+      (dst, () => Warehouse.cloneShallow(spark, src, dst))
+    }),
+    Publisher("renameColumns", () => {
+      val root = freshRoot()
+      Warehouse.commit(spark, root, batch(73))
+      (root, () => Warehouse.renameColumns(spark, root, Map("region" -> "zone")))
+    }),
+    Publisher("publishSnapshotGroup", () => {
+      val member = freshRoot()
+      Warehouse.commit(spark, member, batch(74))
+      val group = freshRoot()
+      (group, () => Warehouse.publishSnapshotGroup(spark, group, Map("t" -> member)))
+    }))
+
+  private def writeLease(root: String, holder: String, atMs: Long): Path = {
+    val lock = new Path(root, "_COMMIT_LOCK")
+    val out = hfs(root).create(lock, false)
+    out.write(s"$holder $atMs".getBytes("UTF-8"))
+    out.close()
+    lock
+  }
+  private def versionDirs(root: String): Set[String] =
+    hfs(root).listStatus(new Path(root)).map(_.getPath.getName)
+      .filter(_.matches("v\\d+")).toSet
+  private def hiddenDirs(root: String): Set[String] =
+    hfs(root).listStatus(new Path(root))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith("."))
+      .map(_.getPath.getName).toSet
+
+  test("one protocol: a live lease refuses every publisher, stays put, and nothing publishes") {
+    publishers.foreach { p =>
+      withClue(s"${p.name}: ") {
+        val (root, publish) = p.setup()
+        val before = versionDirs(root)
+        val pointer = Warehouse.currentVersion(spark, root)
+        val lock = writeLease(root, "live-holder", System.currentTimeMillis())
+        val e = intercept[IllegalStateException](publish())
+        assert(e.getMessage.contains("another commit holds"), e.getMessage)
+        assert(hfs(root).exists(lock), "a live lease must never be broken")
+        assert(hiddenDirs(root).isEmpty, "a refused publish leaked a staging dir")
+        assert(versionDirs(root) === before, "a refused publish created a v-dir")
+        assert(Warehouse.currentVersion(spark, root) === pointer)
+      }
+    }
+  }
+
+  test("one protocol: every publisher reclaims a stale lease and releases it after") {
+    publishers.foreach { p =>
+      withClue(s"${p.name}: ") {
+        val (root, publish) = p.setup()
+        val lock = writeLease(root, "dead-holder",
+          System.currentTimeMillis() - 3600L * 1000)
+        val v = publish()
+        assert(Warehouse.currentVersion(spark, root) === Some(v))
+        assert(versionDirs(root).contains(s"v$v"))
+        assert(!hfs(root).exists(lock), "the winner must release its own lease")
+        assert(hiddenDirs(root).isEmpty, "a published version left a staging dir")
+      }
+    }
+  }
 }
