@@ -99,11 +99,7 @@ object Sharding {
       require(fs.exists(layout),
         s"append into $outDir refused: no $layoutFile — not a shard " +
           "layout built by writeShards (or a pre-layout legacy dir; rebuild)")
-      val in = fs.open(layout)
-      val persisted =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toInt
-        finally in.close()
+      val persisted = graft.pipeline.Ingest.readText(fs, layout).trim.toInt
       require(persisted == nShards,
         s"append into $outDir refused: layout was built with " +
           s"nShards=$persisted, caller passed $nShards — appending would " +

@@ -171,4 +171,20 @@ object Ingest {
 
   private[pipeline] def fs(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  /** `p`'s whole content as UTF-8 — the driver-side read of the small
+    * metadata files (pointers, manifests, sidecars, markers). */
+  private[graft] def readText(fs: FileSystem, p: Path): String = {
+    val in = fs.open(p)
+    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
+      StandardCharsets.UTF_8)
+    finally in.close()
+  }
+
+  /** Create (or overwrite) `p` holding `text` as UTF-8. */
+  private[graft] def writeText(fs: FileSystem, p: Path, text: String): Unit = {
+    val out = fs.create(p, true)
+    try out.write(text.getBytes(StandardCharsets.UTF_8))
+    finally out.close()
+  }
 }

@@ -41,11 +41,7 @@ object Manifest {
     val fs = Ingest.fs(spark, manifestPath)
     val p = new Path(manifestPath)
     if (!fs.exists(p)) return Seq.empty
-    val in = fs.open(p)
-    val txt =
-      try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-        StandardCharsets.UTF_8)
-      finally in.close()
+    val txt = Ingest.readText(fs, p)
     if (txt.trim.isEmpty) return Seq.empty
     new com.fasterxml.jackson.databind.ObjectMapper()
       .readValue(txt, classOf[Array[String]]).toSeq

@@ -4,6 +4,7 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet warehouse with a versioned-directory commit protocol.
   *
@@ -26,6 +27,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[vacuum]] prunes them.
   */
 object Warehouse {
+  import Ingest.{readText, writeText}
 
   private val versionFile = "_VERSION"
   private val lockFile = "_COMMIT_LOCK"
@@ -154,31 +156,12 @@ object Warehouse {
     * cloned source snapshot. */
   private val clonePointer = "_CLONE"
 
-  /** The DATA directory for version `v`: normally the version dir
-    * itself; for a shallow-cloned version, the source snapshot
-    * directory its `_CLONE` pointer names. Every snapshot read in
-    * this object resolves through here, so clones are first-class:
-    * read/diff/change-feed/time-travel/compact/restore all work, and
-    * compacting or committing ON a cloned root writes real data dirs
-    * (copy-on-write at version granularity — the clone never mutates
-    * its source). CORRECT-OR-LOUD: a clone whose source snapshot was
-    * vacuumed fails with a named error instead of an empty read (the
-    * explicit-schema parquet read would otherwise return ZERO ROWS
-    * silently — the one failure mode a lakehouse must not have). */
-  def dataPath(spark: SparkSession, root: String, v: Long): String = {
-    val fs = Ingest.fs(spark, root)
-    val marker = new Path(versionPath(root, v), clonePointer)
-    if (!fs.exists(marker)) versionPath(root, v)
-    else {
-      val target = readText(fs, marker).trim
-      if (!fs.exists(new Path(target, "_SUCCESS")))
-        throw new IllegalStateException(
-          s"shallow clone $root/v$v references $target, which is missing or" +
-            " incomplete (source vacuumed past its retention floor?) —" +
-            " refusing a silent empty read; re-clone or restore the source")
-      target
-    }
-  }
+  /** The DATA directory for version `v` ([[Snapshot.dataDir]]):
+    * normally the version dir itself; for a shallow-cloned version,
+    * the source snapshot directory its `_CLONE` pointer names — loud
+    * when that source was vacuumed. */
+  def dataPath(spark: SparkSession, root: String, v: Long): String =
+    snapshot(spark, root, v).dataDir
 
   /** ZERO-COPY SHALLOW CLONE (the Delta `CLONE` / Iceberg snapshot-ref
     * pattern): publish the source warehouse's CURRENT snapshot as the
@@ -208,15 +191,16 @@ object Warehouse {
       throw new IllegalStateException(
         s"cloneShallow: no committed snapshot under $srcRoot"))
     val srcFs = Ingest.fs(spark, srcRoot)
-    if (dvPartDirs(srcFs, srcRoot, srcV).nonEmpty)
+    val src = snapshot(spark, srcRoot, srcV) // flattens chains + validates
+    if (src.dvParts.nonEmpty)
       throw new IllegalStateException(
         s"cloneShallow: $srcRoot v$srcV carries deletion vectors; a shallow" +
           " clone would resurrect deleted rows — applyDv on the source first")
-    require(manifestOf(srcFs, srcRoot, srcV).isEmpty,
+    require(!src.isManifest,
       s"cloneShallow: $srcRoot v$srcV is a manifest version (files spread" +
         " across version dirs — a single clone pointer cannot reference" +
         " them); compact the source first")
-    val target = dataPath(spark, srcRoot, srcV) // flattens chains + validates
+    val target = src.dataDir
     val fs = Ingest.fs(spark, dstRoot)
     publishVersion(spark, dstRoot, lockTtlMs, expectedCurrent = None,
         op = "cloneShallow") { (stage, _) =>
@@ -267,7 +251,8 @@ object Warehouse {
     val cur = currentVersion(spark, root).getOrElse(
       throw new IllegalStateException(
         s"renameColumns: no committed snapshot under $root"))
-    if (dvPartDirs(fs, root, cur).nonEmpty)
+    val s = snapshot(spark, root, cur) // flattens clone chains + validates
+    if (s.dvParts.nonEmpty)
       throw new IllegalStateException(
         s"renameColumns: $root v$cur carries deletion vectors; the mapped" +
           " version would resurrect deleted rows — applyDv first")
@@ -276,10 +261,9 @@ object Warehouse {
     // composed map — zero data written, the Delta column-mapping
     // shape. Physical names stay on disk forever; every later manifest
     // commit carries the map forward and translates at its boundaries.
-    val curManifest = manifestOf(fs, root, cur)
-    val existing = columnMapping(fs, root, cur) // physical → logical
+    val existing = s.p2l // physical → logical
     val physicalNames =
-      if (curManifest.isDefined) effectiveSchema(spark, root, cur).fieldNames.toSeq
+      if (s.isManifest) s.schema.fieldNames.toSeq
       else schema.fieldNames.toSeq
     val logicalOf: Map[String, String] =
       physicalNames.map(p => p -> existing.getOrElse(p, p)).toMap
@@ -295,39 +279,24 @@ object Warehouse {
     require(finalNames.distinct.size == finalNames.size,
       s"renameColumns: rename set collides — resulting columns" +
         s" ${finalNames.mkString(", ")} are not distinct")
-    val target = dataPath(spark, root, cur) // flattens clone chains + validates
     publishVersion(spark, root, lockTtlMs, expectedCurrent = Some(Some(cur)),
         op = "renameColumns") { (stage, _) =>
-      curManifest match {
+      s.manifest match {
         case Some(lines) =>
           // carry the file list, schema and partitioning VERBATIM —
           // the rename is a map on top of unchanged physical bytes
           writeText(fs, new Path(stage, manifestFile), lines.mkString("\n"))
-          writeText(fs, new Path(stage, manifestSchemaFile),
-            effectiveSchema(spark, root, cur).json)
-          val parts = manifestParts(fs, root, cur)
-          if (parts.nonEmpty)
-            writeText(fs, new Path(stage, manifestPartsFile), parts.mkString("\n"))
+          writeText(fs, new Path(stage, manifestSchemaFile), s.schema.json)
+          if (s.parts.nonEmpty)
+            writeText(fs, new Path(stage, manifestPartsFile), s.parts.mkString("\n"))
         case None =>
-          writeText(fs, new Path(stage, clonePointer), target)
+          writeText(fs, new Path(stage, clonePointer), s.dataDir)
       }
       writeText(fs, new Path(stage, mappingFile), composed
         .filter { case (p, l) => p != l }.toSeq.sorted
         .map { case (p, l) => s"$p\t$l" }.mkString("\n"))
       fs.create(new Path(stage, "_SUCCESS"), true).close()
     }
-  }
-
-  /** Version `v`'s physical→logical column map; empty when the
-    * version was never renamed (then logical ≡ physical). */
-  private def columnMapping(fs: org.apache.hadoop.fs.FileSystem,
-      root: String, v: Long): Map[String, String] = {
-    val p = new Path(versionPath(root, v), mappingFile)
-    if (!fs.exists(p)) Map.empty
-    else readText(fs, p).linesIterator.filter(_.nonEmpty).map { line =>
-      val Array(phys, logical) = line.split("\t", 2)
-      phys -> logical
-    }.toMap
   }
 
   /** Read version `v` (default: current) under its LOGICAL column
@@ -340,14 +309,14 @@ object Warehouse {
     val v = version.orElse(currentVersion(spark, root)).getOrElse(
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema))
-    val m = columnMapping(Ingest.fs(spark, root), root, v)
-    // readSnapshot: manifest versions read their FILE LIST (a raw dir
-    // read would silently drop carried rows); a manifest-carried map
-    // (round 13) renames below exactly like a plain version's
-    val raw = readSnapshot(spark, root, v, schema)
-    if (m.isEmpty) raw
+    val s = snapshot(spark, root, v)
+    // manifest versions read their FILE LIST (a raw dir read would
+    // silently drop carried rows); a manifest-carried map (round 13)
+    // renames below exactly like a plain version's
+    val raw = s.frame(schema)
+    if (s.p2l.isEmpty) raw
     else raw.select(schema.fieldNames.toSeq
-      .map(p => col(s"`$p`").as(m.getOrElse(p, p))): _*)
+      .map(p => col(s"`$p`").as(s.p2l.getOrElse(p, p))): _*)
   }
 
   /** Read the committed snapshot; empty (schema'd) DataFrame if the
@@ -365,59 +334,20 @@ object Warehouse {
   def read(spark: SparkSession, root: String,
       schema: org.apache.spark.sql.types.StructType = CocoaSchema.warehouse): DataFrame =
     currentVersion(spark, root) match {
-      case Some(v) => readSnapshot(spark, root, v, schema)
+      case Some(v) => snapshot(spark, root, v).frame(schema)
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
 
-  /** Version `v`'s rows under an explicit schema — plain snapshots by
-    * their (clone-resolved) data dir, manifest snapshots through the
-    * manifest-backed file index; both correct-or-loud. */
-  private def readSnapshot(spark: SparkSession, root: String, v: Long,
-      schema: org.apache.spark.sql.types.StructType): DataFrame =
-    manifestOf(Ingest.fs(spark, root), root, v) match {
-      case None => readData(spark, root, dataPath(spark, root, v), schema)
-      case Some(_) => manifestFrame(spark, root, v, schema)
-    }
-
-  /** Manifest version `v` as a DataFrame planned over
-    * [[graft.sources.v2.ManifestFileIndex]] — the SAME relation the
-    * connector serves: ZERO filesystem listing and ZERO per-file stat
-    * calls at planning (sizes/mtimes ride the manifest lines), per-file
-    * min/max DATA SKIPPING from the persisted stats, and hive
-    * partition columns served from the path fragments with static
-    * partition pruning. One table, ONE cost model, whichever door the
-    * read comes through. A file vacuumed from under the plan fails the
-    * task loudly (`ignoreMissingFiles` stays false) — correct-or-loud,
-    * as everywhere. */
-  private def manifestFrame(spark: SparkSession, root: String, v: Long,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val h = head(spark, root, v)
-    entriesFrame(spark, h, h.files, schema, withStats = true)
-  }
-
-  /** A SUBSET of manifest version `v`'s files (root-relative paths) as
-    * an index-backed frame under `schema` — the O(Δ) read behind the
-    * snapshot stream's manifest-append fast path: only the named files
-    * plan, with partition columns served from their fragments. */
-  private[graft] def readManifestFiles(spark: SparkSession, root: String,
-      v: Long, relPaths: Set[String],
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
-    val fs = Ingest.fs(spark, root)
-    val abs = relPaths.map(r => fs.makeQualified(new Path(root, r)).toString)
-    val h = head(spark, root, v)
-    entriesFrame(spark, h, h.files.filter(e => abs(e.path)), schema)
-  }
-
   /** Index-backed frame over a SUBSET of `h`'s files — the building
-    * block behind [[manifestFrame]] and the file-granular DML
+    * block behind [[Snapshot.frame]] and the file-granular DML
     * planning/rewrite reads: partition columns served from the path
     * fragments, zero listing, and with `withStats` the persisted stats
     * prune files at planning. `withFilePath = true` additionally
     * surfaces `_metadata.file_path` as `__file` (projected directly
     * above the relation, where metadata columns are guaranteed
     * resolvable). */
-  private def entriesFrame(spark: SparkSession, h: Head, files: Seq[FileEntry],
+  private def entriesFrame(spark: SparkSession, h: Snapshot, files: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType,
       withStats: Boolean = false,
       withFilePath: Boolean = false,
@@ -439,7 +369,7 @@ object Warehouse {
       schema.fields.filterNot(f => parts.contains(f.name)))
     val idx = new graft.sources.v2.ManifestFileIndex(spark, h.root,
       files.map(e => (e.path, e.size, e.mtime)),
-      if (withStats) dataFileStats(spark, h.root, h.version) else Map.empty,
+      if (withStats) h.stats else Map.empty,
       partSchema)
     val base = org.apache.spark.sql.graftbridge.Bridge
       .ofFileIndex(spark, idx, dataSchema, partSchema)
@@ -457,11 +387,9 @@ object Warehouse {
     * [[readData]]). */
   def readVersion(spark: SparkSession, root: String, v: Long,
       schema: org.apache.spark.sql.types.StructType = CocoaSchema.warehouse): DataFrame = {
-    val fs = Ingest.fs(spark, root)
-    require(fs.exists(new Path(versionPath(root, v), "_SUCCESS")) ||
-      fs.exists(new Path(versionPath(root, v), clonePointer)),
-      s"readVersion: version $v of $root is missing or incomplete")
-    readSnapshot(spark, root, v, schema)
+    val s = snapshot(spark, root, v)
+    s.requireComplete("readVersion")
+    s.frame(schema)
   }
 
   /** TIME-TRAVEL read of one committed version as a SQL consumer must
@@ -475,20 +403,16 @@ object Warehouse {
     * broadcast, overgrown ones shuffle — [[applyDv]] is the
     * maintenance valve either way). */
   def readVersionLive(spark: SparkSession, root: String, v: Long): DataFrame = {
-    val fs = Ingest.fs(spark, root)
-    require(fs.exists(new Path(versionPath(root, v), "_SUCCESS")) ||
-      fs.exists(new Path(versionPath(root, v), clonePointer)),
-      s"readVersionLive: version $v of $root is missing or incomplete")
-    // infer the PHYSICAL schema from the snapshot's own files (the
-    // manifest's listed files when it has one), lift it to the
-    // version's logical names, and delegate the DV anti-join + rename
-    // translation to the one shared implementation
-    val physSchema = effectiveSchema(spark, root, v)
-    val m = columnMapping(fs, root, v)
-    val logical = org.apache.spark.sql.types.StructType(
-      physSchema.fields.map(f => f.copy(name = m.getOrElse(f.name, f.name))))
-    liveEraSnap(spark, root, v, logical, eraOf = Some(v))
+    val s = snapshot(spark, root, v)
+    s.requireComplete("readVersionLive")
+    liveOf(s)
   }
+
+  /** `s`'s live rows under its own LOGICAL schema: the physical schema
+    * (persisted, or inferred once from the files) lifted through the
+    * rename map, DV anti-join and translation by [[liveEraSnap]]. */
+  private def liveOf(s: Snapshot): DataFrame =
+    liveEraSnap(s, s.logical(s.schema), eraOf = Some(s.version))
 
   /** Explicit-schema parquet read of one snapshot data dir, loud when
     * the dir vanished mid-resolution.
@@ -766,37 +690,6 @@ object Warehouse {
     else readText(fs, p).linesIterator.filter(_.nonEmpty).toSeq
   }
 
-  /** The hive partition columns of version `v`, whatever its kind:
-    * a manifest version's persisted `_MANIFEST_PARTS`, a plain
-    * version's nested `k=` directory chain (walked, not listed per
-    * file — one getFileStatus per nesting level). Empty = flat. */
-  private[graft] def partitionColsOf(spark: SparkSession, root: String,
-      v: Long): Seq[String] = {
-    val fs = Ingest.fs(spark, root)
-    if (manifestOf(fs, root, v).isDefined) manifestParts(fs, root, v)
-    else {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[String]
-      var dir = new Path(dataPath(spark, root, v))
-      var descend = true
-      while (descend) {
-        val sub = fs.listStatus(dir).filter(s =>
-          s.isDirectory && s.getPath.getName.contains("=") &&
-            !s.getPath.getName.startsWith("_") &&
-            !s.getPath.getName.startsWith("."))
-        if (sub.isEmpty) descend = false
-        else {
-          val names = sub.map(_.getPath.getName.takeWhile(_ != '=')).distinct
-          require(names.length == 1,
-            s"partition layout of $root v$v mixes column dirs" +
-              s" (${names.mkString(", ")}) at one level")
-          buf += names.head
-          dir = sub.head.getPath
-        }
-      }
-      buf.toSeq
-    }
-  }
-
   /** Recursive `*.parquet` listing under `dir`, excluding any file
     * with a `_`- or `.`-prefixed path segment relative to `dir` (the
     * builtin hidden-path rule — `_zonemap` sidecars, `_SUCCESS`,
@@ -818,42 +711,24 @@ object Warehouse {
     buf.toSeq
   }
 
-  /** Absolute, filesystem-QUALIFIED data file paths of version `v`:
-    * a manifest version's listed files, or one listing of a plain
-    * version's (clone-resolved) data dir. Qualified so the paths
-    * compare exactly against `_metadata.file_path`-derived keys. */
+  /** Absolute, filesystem-QUALIFIED data file paths of version `v`
+    * ([[Snapshot.files]]) — they compare exactly against
+    * `_metadata.file_path`-derived keys. */
   private[graft] def dataFilesOf(spark: SparkSession, root: String,
-      v: Long): Seq[String] = dataFileEntries(spark, root, v).map(_._1)
+      v: Long): Seq[String] = snapshot(spark, root, v).files.map(_.path)
 
-  /** Version `v`'s data files WITH their manifest-persisted (size,
-    * mtime) — the connector builds its scan file index from these,
-    * so a manifest read plans with ZERO filesystem listing or
-    * per-file stat calls (the manifest IS the listing, the Delta-log
-    * property). Legacy manifest lines without the size columns fall
-    * back to one stat per file; plain versions list their dir. */
+  /** Version `v`'s data files WITH their (size, mtime) — a manifest
+    * version's persisted entries, a plain version's one listing
+    * ([[Snapshot.files]]). */
   private[graft] def dataFileEntries(spark: SparkSession, root: String,
-      v: Long): Seq[(String, Long, Long)] = {
-    val fs = Ingest.fs(spark, root)
-    manifestOf(fs, root, v) match {
-      case Some(lines) => lines.map { line =>
-        val e = manifestEntry(fs, root, line)
-        (e.path, e.size, e.mtime)
-      }
-      case None =>
-        // recursive + hidden-aware: a hive-partitioned plain version
-        // keeps its files under `k=v` subdirs — the flat listStatus
-        // would miss them (and a `_zonemap` sidecar must stay out)
-        listDataFiles(fs, new Path(dataPath(spark, root, v)))
-          .map(s => (fs.makeQualified(s.getPath).toString,
-            s.getLen, s.getModificationTime))
-    }
-  }
+      v: Long): Seq[(String, Long, Long)] =
+    snapshot(spark, root, v).files.map(e => (e.path, e.size, e.mtime))
 
   /** One data file of a resolved version: its filesystem-qualified
     * path, persisted size and mtime, and the manifest line that
     * carries it into the next version VERBATIM (persisted sizes and
     * data-skipping stats survive every carry). */
-  private final case class FileEntry(path: String, size: Long, mtime: Long,
+  private[graft] final case class FileEntry(path: String, size: Long, mtime: Long,
       line: String)
 
   /** One manifest line parsed; legacy lines without the size columns
@@ -870,47 +745,286 @@ object Warehouse {
           st.getLen, st.getModificationTime, line)
     }
 
-  /** A version resolved ONCE for a manifest read or commit: its
-    * PHYSICAL effective schema, carried rename map (physical →
-    * logical) and inverse, hive partition columns, and data files. */
-  private final case class Head(root: String, version: Long,
-      schema: org.apache.spark.sql.types.StructType,
-      p2l: Map[String, String], parts: Seq[String], files: Seq[FileEntry]) {
-    val l2p: Map[String, String] = p2l.map(_.swap)
+  /** One committed version resolved ONCE — the Delta `Snapshot` /
+    * Iceberg `TableMetadata` idea on a plain filesystem. Every read
+    * door, manifest-commit base, CDC path and connector scan
+    * ([[graft.sources.v2]]) takes what it knows about a version from
+    * here, so each of these rules is written once: manifest or plain
+    * ([[manifest]]), the clone indirection ([[dataDir]]), completeness
+    * ([[complete]]), which deletion-vector parts count ([[dvParts]]),
+    * and the rename-era guard ([[eraBreak]]).
+    *
+    * Resolved up front by [[snapshot]]: the manifest lines (the one
+    * cached [[manifestOf]] probe) and the clone-resolved data dir.
+    * Everything that costs I/O is LAZY and computed at most once: the
+    * rename map, partition columns, the physical [[schema]] (a
+    * footer-inference Spark JOB on a plain version), the [[files]] (a
+    * recursive LISTING on a plain version), per-file [[stats]], the
+    * DV parts and their bytes, and the on-disk [[bytes]]. Lazy because
+    * the benchmark's hot reads — an explicit-schema read of one
+    * version ([[read]], [[readVersion]], the connector's plain scan,
+    * which infers through its own `ParquetTable`) — need none of them:
+    * resolving costs those reads no extra filesystem call or job,
+    * while a path that needs one fact twice (the era guard and the
+    * logical schema of a live read) pays for it once. Nothing caches
+    * a Snapshot past the read or commit that resolved it — deletion
+    * vectors attach to a version in place. */
+  private[graft] final class Snapshot private[Warehouse] (
+      private[Warehouse] val spark: SparkSession, fs: FileSystem,
+      val root: String, val version: Long,
+      val manifest: Option[Seq[String]], val dataDir: String) {
+    private def dir = new Path(versionPath(root, version))
+
+    def isManifest: Boolean = manifest.isDefined
+
+    /** Published: `_SUCCESS` present, or a shallow-clone pointer. */
+    lazy val complete: Boolean =
+      fs.exists(new Path(dir, "_SUCCESS")) || fs.exists(new Path(dir, clonePointer))
+
+    def requireComplete(op: String, context: String = ""): Unit =
+      require(complete,
+        s"$op: version $version of $root is missing or incomplete$context")
+
+    /** Physical → logical column map; empty when the version was never
+      * renamed (then logical ≡ physical). */
+    lazy val p2l: Map[String, String] = {
+      val p = new Path(dir, mappingFile)
+      if (!fs.exists(p)) Map.empty
+      else readText(fs, p).linesIterator.filter(_.nonEmpty).map { line =>
+        val Array(phys, logical) = line.split("\t", 2)
+        phys -> logical
+      }.toMap
+    }
+    lazy val l2p: Map[String, String] = p2l.map(_.swap)
+
     /** `s` (physical names) under this version's logical names. */
-    def logical(s: org.apache.spark.sql.types.StructType): org.apache.spark.sql.types.StructType =
-      org.apache.spark.sql.types.StructType(
-        s.fields.map(f => f.copy(name = p2l.getOrElse(f.name, f.name))))
+    def logical(s: StructType): StructType =
+      StructType(s.fields.map(f => f.copy(name = p2l.getOrElse(f.name, f.name))))
+
+    /** Hive partition columns in nesting order (empty = flat): a
+      * manifest version's persisted `_MANIFEST_PARTS`, a plain
+      * version's nested `k=` directory chain (walked, not listed per
+      * file — one listStatus per nesting level). */
+    lazy val parts: Seq[String] =
+      if (isManifest) manifestParts(fs, root, version)
+      else {
+        val buf = scala.collection.mutable.ArrayBuffer.empty[String]
+        var d = new Path(dataDir)
+        var descend = true
+        while (descend) {
+          val sub = fs.listStatus(d).filter(s =>
+            s.isDirectory && s.getPath.getName.contains("=") &&
+              !s.getPath.getName.startsWith("_") &&
+              !s.getPath.getName.startsWith("."))
+          if (sub.isEmpty) descend = false
+          else {
+            val names = sub.map(_.getPath.getName.takeWhile(_ != '=')).distinct
+            require(names.length == 1,
+              s"partition layout of $root v$version mixes column dirs" +
+                s" (${names.mkString(", ")}) at one level")
+            buf += names.head
+            d = sub.head.getPath
+          }
+        }
+        buf.toSeq
+      }
+
+    /** The PHYSICAL effective schema: a manifest version's schema
+      * persisted at commit time (`_MANIFEST_SCHEMA`; a deterministic
+      * by-name footer merge for a legacy manifest without it), a plain
+      * version's inference over its uniform data dir. */
+    lazy val schema: StructType = manifest match {
+      case None => spark.read.parquet(dataDir).schema
+      case Some(_) =>
+        val p = new Path(dir, manifestSchemaFile)
+        if (fs.exists(p)) {
+          val parsed = org.apache.spark.sql.types.DataType.fromJson(readText(fs, p))
+            .asInstanceOf[StructType]
+          // NULLABLE-RELAXED, the same rule parquet reads and
+          // DataFrameReader.schema() apply: a widened chain's older
+          // files MISS the widened columns (null-fill is the contract),
+          // and a non-nullable field here would let the analyzer
+          // constant-fold `col IS NULL` to FALSE over connector reads —
+          // silently wrong results, not just a reader error
+          StructType(parsed.fields.map(_.copy(nullable = true)))
+        } else files match {
+          // legacy manifest without the sidecar: deterministic by-name
+          // union (one footer job), never a one-footer sample
+          case Seq() => StructType(Nil)
+          case entries => spark.read.option("mergeSchema", "true")
+            .parquet(entries.map(_.path): _*).schema
+        }
+    }
+
+    /** The version's data files: a manifest version's persisted
+      * entries (the manifest IS the listing — zero stat calls, the
+      * Delta-log property), or one recursive, hidden-aware listing of
+      * a plain version's data dir (hive `k=v` subdirs included, a
+      * `_zonemap` sidecar excluded). A plain version's lines are
+      * synthesized root-relative without stats — what the zero-copy
+      * conversion INTO manifest mode carries (unknown files are never
+      * pruned); a clone's files live outside the root and keep their
+      * absolute path, never carried ([[commitHead]] refuses clones). */
+    lazy val files: Seq[FileEntry] = manifest match {
+      case Some(lines) => lines.map(manifestEntry(fs, root, _))
+      case None =>
+        val rootQ = fs.makeQualified(new Path(root)).toString.stripSuffix("/")
+        listDataFiles(fs, new Path(dataDir)).map { st =>
+          val abs = fs.makeQualified(st.getPath).toString
+          FileEntry(abs, st.getLen, st.getModificationTime,
+            s"${abs.stripPrefix(rootQ + "/")}\t${st.getLen}\t${st.getModificationTime}")
+        }
+    }
+
+    /** Persisted per-file data-skipping stats ([[statsOf]]); empty for
+      * a plain version. */
+    lazy val stats: Map[String, Map[String, (Option[Any], Option[Any])]] = statsOf(this)
+
+    /** All COMPLETE deletion-vector part dirs scoped to this version
+      * (each `d_{uuid}` published by one [[deleteWhere]] call) — exactly
+      * the set a DV read consumes: an in-flight or crashed
+      * `.stage_d_*` staging dir, or a part without `_SUCCESS`, never
+      * counts. */
+    lazy val dvParts: Seq[Path] = {
+      val d = new Path(dvPath(root, version))
+      if (!fs.exists(d)) Nil
+      else fs.listStatus(d).toSeq
+        .filter(s => s.isDirectory && s.getPath.getName.startsWith("d_") &&
+          fs.exists(new Path(s.getPath, "_SUCCESS")))
+        .map(_.getPath)
+    }
+
+    /** On-disk bytes of [[dvParts]] (one content summary per part). */
+    lazy val dvBytes: Long = dvParts.map(p => fs.getContentSummary(p).getLength).sum
+
+    /** [[dvParts]] unioned as (file, pos) rows; None when no delete has
+      * ever run against this version. */
+    def dvFrame: Option[DataFrame] =
+      if (dvParts.isEmpty) None
+      else Some(spark.read.schema(dvSchema).parquet(dvParts.map(_.toString): _*))
+
+    /** On-disk data bytes: a manifest version's PERSISTED sizes (never
+      * one stat per file on exactly the tables the manifest spares from
+      * listings), a plain version's one dir content summary. */
+    lazy val bytes: Long =
+      if (isManifest) files.map(_.size).sum
+      else Ingest.fs(spark, dataDir).getContentSummary(new Path(dataDir)).getLength
+
+    /** The rename-map era this version belongs to ([[eraMaps]]): its
+      * data dir — or, for a manifest version, the one era its whole
+      * chain shares (physical names are stable across it and every
+      * commit re-persists the same COMPOSED map). */
+    def eraKey: String = if (isManifest) s"$root#manifest-era" else dataDir
+
+    /** The rows under an explicit schema — a plain version by its
+      * (clone-resolved) data dir ([[readData]]), a manifest version
+      * planned over [[graft.sources.v2.ManifestFileIndex]], the SAME
+      * relation the connector serves: ZERO filesystem listing and ZERO
+      * per-file stat calls at planning (sizes/mtimes ride the manifest
+      * lines), per-file min/max DATA SKIPPING from the persisted stats,
+      * and hive partition columns served from the path fragments with
+      * static partition pruning. A file vacuumed from under the plan
+      * fails the task loudly (`ignoreMissingFiles` stays false). */
+    def frame(schema: StructType): DataFrame = manifest match {
+      case None => readData(spark, root, dataDir, schema)
+      case Some(_) => entriesFrame(spark, this, files, schema, withStats = true)
+    }
+
+    /** A SUBSET of a manifest version's files (root-relative paths) as
+      * an index-backed frame under `schema` — the O(Δ) read behind the
+      * manifest-append fast paths (change feed, snapshot stream): only
+      * the named files plan, partition columns served from their
+      * fragments. */
+    def filesFrame(relPaths: Set[String], schema: StructType): DataFrame = {
+      val abs = relPaths.map(r => fs.makeQualified(new Path(root, r)).toString)
+      entriesFrame(spark, this, files.filter(e => abs(e.path)), schema)
+    }
+
+    /** The rows under the version's own PHYSICAL schema, pre-DV. */
+    def raw: DataFrame =
+      if (isManifest) frame(schema) else spark.read.parquet(dataDir)
+
+    /** `eraOf`-era logical name → the PHYSICAL name in this version's
+      * files: the rename-map chain between the two versions walked
+      * BACKWARD from the caller's names. Maps are keyed by data-dir era
+      * ([[eraKey]] — a rename is a pointer version over its
+      * predecessor's dir, and [[renameColumns]] COMPOSES a second
+      * rename on the same dir into one map instead of chaining), so
+      * the walk groups versions `version..eraOf` into contiguous era
+      * runs, takes each run's LAST map, and inverts them newest-first.
+      * O(versions) metadata reads — diff/feed/merge/stream-replay
+      * cost, never a query hot path. */
+    def eraL2P(eraOf: Long, logicalNames: Seq[String]): Map[String, String] =
+      if (eraOf <= version) l2p.filter { case (l, p) => l != p }
+      else {
+        val maps = eraMaps(this, eraOf) // oldest→newest
+        logicalNames.map { n =>
+          n -> maps.reverseIterator.foldLeft(n)((cur, m) =>
+            m.collectFirst { case (p, l) if l == cur => p }.getOrElse(cur))
+        }.toMap.filter { case (l, p) => l != p }
+      }
+
+    /** The RENAME-ERA GUARD: `phys` (a caller's columns translated to
+      * this version's physical names) against the files' schema. A
+      * pinned column missing from the files WHILE the files carry an
+      * unclaimed one is an untranslated rename, whose read would
+      * null-fill silently: Some((missing, unclaimed)), for the caller
+      * to refuse loudly. Missing-only is the legal ADD-COLUMNS widening
+      * (a pre-widening version read under the widened schema null-fills
+      * the new columns BY CONTRACT): None. */
+    def eraBreak(phys: Seq[String]): Option[(Seq[String], Set[String])] = {
+      val onDisk = schema.fieldNames.toSet
+      val missing = phys.filterNot(onDisk.contains)
+      val extra = onDisk -- phys
+      if (missing.nonEmpty && extra.nonEmpty) Some((missing, extra)) else None
+    }
   }
 
-  private def head(spark: SparkSession, root: String, v: Long): Head = {
+  /** Resolve version `v` of `root` into its [[Snapshot]]: the cached
+    * manifest probe, then, for a non-manifest version, the `_CLONE`
+    * indirection — a shallow-cloned version's data dir is the source
+    * snapshot dir its pointer names, so clones are first-class
+    * everywhere (read/diff/change-feed/time-travel/compact/restore),
+    * and committing ON a cloned root writes real data dirs
+    * (copy-on-write at version granularity). CORRECT-OR-LOUD: a clone
+    * whose source snapshot was vacuumed fails here with a named error
+    * instead of an empty read (the explicit-schema parquet read would
+    * otherwise return ZERO ROWS silently — the one failure mode a
+    * lakehouse must not have). A version that does not exist resolves
+    * as an empty plain dir; callers that need it published check
+    * [[Snapshot.complete]]. */
+  private[graft] def snapshot(spark: SparkSession, root: String, v: Long): Snapshot = {
     val fs = Ingest.fs(spark, root)
-    val files = manifestOf(fs, root, v) match {
-      case Some(lines) => lines.map(manifestEntry(fs, root, _))
-      // a plain version (the zero-copy conversion INTO manifest mode):
-      // lines synthesized from its one listing, no stats — graceful,
-      // unknown files are never pruned
-      case None => dataFileEntries(spark, root, v).map { case (abs, sz, mt) =>
-        FileEntry(abs, sz, mt, s"${relativeToRoot(fs, root, abs)}\t$sz\t$mt") }
-    }
-    Head(root, v, effectiveSchema(spark, root, v), columnMapping(fs, root, v),
-      partitionColsOf(spark, root, v), files)
+    val manifest = manifestOf(fs, root, v)
+    val marker = new Path(versionPath(root, v), clonePointer)
+    val dataDir =
+      if (manifest.isDefined || !fs.exists(marker)) versionPath(root, v)
+      else {
+        val target = readText(fs, marker).trim
+        if (!fs.exists(new Path(target, "_SUCCESS")))
+          throw new IllegalStateException(
+            s"shallow clone $root/v$v references $target, which is missing or" +
+              " incomplete (source vacuumed past its retention floor?) —" +
+              " refusing a silent empty read; re-clone or restore the source")
+        target
+      }
+    new Snapshot(spark, fs, root, v, manifest, dataDir)
   }
 
   /** The CURRENT version resolved as a manifest commit's base, refused
     * per the composition contract on [[manifestFile]]; None for a root
     * with no committed version. */
-  private def commitHead(spark: SparkSession, root: String): Option[Head] =
+  private def commitHead(spark: SparkSession, root: String): Option[Snapshot] =
     currentVersion(spark, root).map { cur =>
-      val fs = Ingest.fs(spark, root)
-      require(dvPartDirs(fs, root, cur).isEmpty,
+      val s = snapshot(spark, root, cur)
+      require(s.dvParts.isEmpty,
         s"manifest commit: $root v$cur carries deletion vectors — applyDv" +
           " (or compact) first")
-      if (manifestOf(fs, root, cur).isEmpty) {
-        require(dataPath(spark, root, cur) == versionPath(root, cur),
+      if (!s.isManifest) {
+        require(s.dataDir == versionPath(root, cur),
           s"manifest commit: $root v$cur is a shallow-clone pointer — compact" +
             " first (gives the clone its own files)")
-        require(columnMapping(fs, root, cur).isEmpty,
+        require(s.p2l.isEmpty,
           s"manifest commit: $root v$cur is a renamed plain snapshot (a clone" +
             " pointer + map) — compact first (materializes the logical names)")
       }
@@ -918,62 +1032,22 @@ object Warehouse {
       // fragments; _MANIFEST_PARTS names the columns), and so do RENAME
       // maps on MANIFEST versions (carried forward by every commit; DML
       // translates logical ⇄ physical at its boundaries)
-      head(spark, root, cur)
+      s
     }
-
-  /** On-disk bytes of version `v`'s data — manifest versions by their
-    * file list (spread across version dirs), plain versions by one
-    * dir content summary. */
-  private def snapshotBytes(spark: SparkSession, root: String, v: Long): Long = {
-    val fs = Ingest.fs(spark, root)
-    manifestOf(fs, root, v) match {
-      case Some(_) =>
-        // the sizes PERSISTED in the manifest — never one stat RPC
-        // per file on exactly the tables the manifest exists to
-        // spare from listings
-        dataFileEntries(spark, root, v).map(_._2).sum
-      case None =>
-        val snap = dataPath(spark, root, v)
-        Ingest.fs(spark, snap).getContentSummary(new Path(snap)).getLength
-    }
-  }
 
   /** Version `v`'s SNAPSHOT-FILE rows, schema inferred from its own
     * files — the pre-DV raw read the SQL introspection surface
     * (graft_history et al.) uses. Manifest-aware: a manifest version
-    * reads its LISTED files (a raw dir read would count only the
-    * newly-written ones). */
+    * reads its LISTED files under its PERSISTED schema (a raw dir read
+    * would count only the newly-written ones; a widened chain has
+    * mixed footers, an emptied one none at all). */
   private[graft] def readVersionRaw(spark: SparkSession, root: String,
-      v: Long): DataFrame = {
-    val fs = Ingest.fs(spark, root)
-    manifestOf(fs, root, v) match {
-      case None => spark.read.parquet(dataPath(spark, root, v))
-      case Some(_) =>
-        // the PERSISTED effective schema, not footer inference: a
-        // widened manifest chain has mixed footers, and an emptied
-        // one has none at all; the manifest-backed index serves
-        // partition columns and skips the listing
-        manifestFrame(spark, root, v, effectiveSchema(spark, root, v))
-    }
-  }
+      v: Long): DataFrame = snapshot(spark, root, v).raw
 
   /** The file-identity key of `absPath` as `_metadata.file_path`
     * renders it (URL-encoded URI — see the DV-key precedent). */
   private def sparkPathKey(absPath: String): String =
     org.apache.spark.paths.SparkPath.fromPath(new Path(absPath)).toString
-
-  /** Root-relative manifest entry for an absolute path under `root`;
-    * loud when the file lives outside the root (a clone's data —
-    * referencing it would let the OTHER table's vacuum break us). */
-  private def relativeToRoot(fs: FileSystem, root: String,
-      absPath: String): String = {
-    val rootQ = fs.makeQualified(new Path(root)).toString.stripSuffix("/")
-    val abs = fs.makeQualified(new Path(absPath)).toString
-    require(abs.startsWith(rootQ + "/"),
-      s"manifest commit: data file $abs lives outside $root — compact the" +
-        " clone into its own data first")
-    abs.stripPrefix(rootQ + "/")
-  }
 
   /** `df` with `m`'s renames applied to matching columns (others,
     * including helper columns like `__file`, pass through). */
@@ -1008,36 +1082,10 @@ object Warehouse {
     * table metadata, never re-derived from data files. */
   private val manifestSchemaFile = "_MANIFEST_SCHEMA"
 
-  /** The EFFECTIVE schema of version `v`: manifest versions read the
-    * schema persisted at commit time (deterministic-merge fallback for
-    * none), plain versions infer from their uniform data dir. */
+  /** The EFFECTIVE (physical) schema of version `v`
+    * ([[Snapshot.schema]]). */
   private[graft] def effectiveSchema(spark: SparkSession, root: String,
-      v: Long): org.apache.spark.sql.types.StructType = {
-    val fs = Ingest.fs(spark, root)
-    if (manifestOf(fs, root, v).isEmpty)
-      spark.read.parquet(dataPath(spark, root, v)).schema
-    else {
-      val p = new Path(versionPath(root, v), manifestSchemaFile)
-      if (fs.exists(p)) {
-        val parsed = org.apache.spark.sql.types.DataType.fromJson(readText(fs, p))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-        // NULLABLE-RELAXED, the same rule parquet reads and
-        // DataFrameReader.schema() apply: a widened chain's older
-        // files MISS the widened columns (null-fill is the contract),
-        // and a non-nullable field here would let the analyzer
-        // constant-fold `col IS NULL` to FALSE over connector reads —
-        // silently wrong results, not just a reader error
-        org.apache.spark.sql.types.StructType(
-          parsed.fields.map(_.copy(nullable = true)))
-      } else dataFilesOf(spark, root, v) match {
-        // legacy manifest without the sidecar: deterministic by-name
-        // union (one footer job), never a one-footer sample
-        case Seq() => org.apache.spark.sql.types.StructType(Nil)
-        case files => spark.read.option("mergeSchema", "true")
-          .parquet(files: _*).schema
-      }
-    }
-  }
+      v: Long): StructType = snapshot(spark, root, v).schema
 
   /** Run `f` with AQE disabled on `spark`'s session, restoring the
     * previous value after. The warehouse's per-commit METADATA queries
@@ -1112,19 +1160,6 @@ object Warehouse {
         .map { case (p, l) => s"$p\t$l" }.mkString("\n"))
   }
 
-  private def writeText(fs: FileSystem, p: Path, text: String): Unit = {
-    val out = fs.create(p, true)
-    try out.write(text.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
-  private def readText(fs: FileSystem, p: Path): String = {
-    val in = fs.open(p)
-    try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-      StandardCharsets.UTF_8)
-    finally in.close()
-  }
-
   /** Replace `dir/name` with `text` atomically: write a `.name.tmp`
     * sibling, then `FileContext.rename(OVERWRITE)` — readers see the
     * old content or the new, never a missing or torn file. */
@@ -1136,7 +1171,7 @@ object Warehouse {
       .rename(tmp, new Path(dir, name), org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Version `v`'s persisted per-file data-skipping stats: absolute
+  /** A version's persisted per-file data-skipping stats: absolute
     * file path → column → (min, max) in the pruning-portable external
     * forms the commit's write collected
     * ([[org.apache.spark.sql.graftbridge.FileStatsTracker]]); files or
@@ -1149,12 +1184,13 @@ object Warehouse {
   private val statsCache = new java.util.concurrent.ConcurrentHashMap[
     String, (Long, Long, Map[String, Map[String, (Option[Any], Option[Any])]])]()
 
-  private[graft] def dataFileStats(spark: SparkSession, root: String,
-      v: Long): Map[String, Map[String, (Option[Any], Option[Any])]] = {
-    val fs = Ingest.fs(spark, root)
+  private def statsOf(s: Snapshot): Map[String, Map[String, (Option[Any], Option[Any])]] = {
+    val lines = s.manifest.getOrElse(return Map.empty)
+    val root = s.root
+    val fs = Ingest.fs(s.spark, root)
     // same immutability-keyed cache as [[manifestOf]] — the JSON parse
     // is O(manifest text) and a single DML call plans several reads
-    val cachePath = new Path(versionPath(root, v), manifestFile)
+    val cachePath = new Path(versionPath(root, s.version), manifestFile)
     val stOpt = scala.util.Try(fs.getFileStatus(cachePath)).toOption
     val cacheKey = fs.makeQualified(cachePath).toString
     stOpt.foreach { st =>
@@ -1168,12 +1204,11 @@ object Warehouse {
       else if (n.isNumber) Some(n.decimalValue())
       else if (n.isTextual) Some(n.asText())
       else None
-    val lines = manifestOf(fs, root, v).getOrElse(return Map.empty)
     // floating columns whose stats lack a `nan:` flag are LEGACY
     // (written before the flag existed, NaN silently stripped): their
     // max may understate NaN rows, so their stats must not prune —
     // the current writer always emits the flag for float/double
-    val floating: Set[String] = effectiveSchema(spark, root, v).fields
+    val floating: Set[String] = s.schema.fields
       .collect { case f if f.dataType ==
         org.apache.spark.sql.types.FloatType || f.dataType ==
         org.apache.spark.sql.types.DoubleType => f.name }.toSet
@@ -1213,7 +1248,7 @@ object Warehouse {
     * additive-evolution widening. A novel name colliding with a renamed
     * column's PHYSICAL name is loud: the widening would silently fold
     * its data into the wrong column. */
-  private def widenedSchema(h: Head, incoming: org.apache.spark.sql.types.StructType,
+  private def widenedSchema(h: Snapshot, incoming: org.apache.spark.sql.types.StructType,
       what: String): org.apache.spark.sql.types.StructType = {
     val current = h.logical(h.schema)
     requireSameColumns(incoming, current, what)
@@ -1227,7 +1262,7 @@ object Warehouse {
 
   /** [[entriesFrame]] surfaced under the version's LOGICAL names —
     * the names DML predicates, assignments and merge sources use. */
-  private def logicalFiles(spark: SparkSession, h: Head, files: Seq[FileEntry],
+  private def logicalFiles(spark: SparkSession, h: Snapshot, files: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType, withStats: Boolean = false,
       withFilePath: Boolean = false): DataFrame =
     renameCols(entriesFrame(spark, h, files, schema, withStats, withFilePath),
@@ -1241,7 +1276,7 @@ object Warehouse {
     * stats PRUNE candidate files before any task runs. The file list is
     * one driver-side collect bounded by the match's file spread — the
     * shape Delta's DELETE/MERGE planning uses. */
-  private def planTouched(spark: SparkSession, h: Head,
+  private def planTouched(spark: SparkSession, h: Snapshot,
       select: DataFrame => DataFrame): (Seq[FileEntry], Seq[FileEntry]) = {
     if (h.files.isEmpty) return (Nil, Nil)
     val keys = withAqeOff(spark)(
@@ -1264,7 +1299,7 @@ object Warehouse {
     * publishes ATOMICALLY with the version (the streaming sink's
     * exactly-once epoch rides the same rename as the rows it fences). */
   private def publishManifest(spark: SparkSession, root: String,
-      base: Option[Head], kept: Seq[FileEntry],
+      base: Option[Snapshot], kept: Seq[FileEntry],
       schema: org.apache.spark.sql.types.StructType, parts: Seq[String],
       lockTtlMs: Long, stageMarker: Option[(String, String)] = None)(
       rows: => DataFrame): Long = {
@@ -1565,101 +1600,62 @@ object Warehouse {
     // the caller's names are CURRENT-era logical names — both sides
     // translate their rename chains up to the table's present
     val era = currentVersion(spark, root)
-    diffFrames(liveEraSnap(spark, root, fromVersion, schema, eraOf = era),
-      liveEraSnap(spark, root, toVersion, schema, eraOf = era), keyCols)
+    diffFrames(liveEraSnap(snapshot(spark, root, fromVersion), schema, eraOf = era),
+      liveEraSnap(snapshot(spark, root, toVersion), schema, eraOf = era), keyCols)
   }
 
-  /** `eraOf`-era logical name → PHYSICAL name at version `v`: the
-    * rename-map chain between the two versions walked BACKWARD from
-    * the caller's names. Maps are keyed by DATA-DIRECTORY era (a
-    * rename is a pointer version over its predecessor's dir, and
-    * [[renameColumns]] COMPOSES a second rename on the same dir into
-    * one map instead of chaining) — so the walk groups versions
-    * `v..eraOf` into contiguous dir runs, takes each run's LAST map,
-    * and inverts them newest-first. O(versions) metadata reads —
-    * diff/feed/merge maintenance cost, never a query hot path. */
-  private def eraL2P(spark: SparkSession, root: String, v: Long,
-      eraOf: Long, logicalNames: Seq[String]): Map[String, String] = {
-    val fs = Ingest.fs(spark, root)
-    if (eraOf <= v) columnMapping(fs, root, v).map(_.swap)
-      .filter { case (l, p) => l != p }
-    else {
-      val maps = eraMaps(spark, root, v, eraOf) // oldest→newest
-      logicalNames.map { n =>
-        n -> maps.reverseIterator.foldLeft(n)((cur, m) =>
-          m.collectFirst { case (p, l) if l == cur => p }.getOrElse(cur))
-      }.toMap.filter { case (l, p) => l != p }
-    }
-  }
-
-  /** The rename maps in force between versions `lo..hi`, oldest first
-    * — one (composed) map per data-directory era that carries one
-    * (see [[eraL2P]]'s doc for why the grouping is by dir run). */
-  private def eraMaps(spark: SparkSession, root: String, lo: Long,
-      hi: Long): Seq[Map[String, String]] = {
-    val fs = Ingest.fs(spark, root)
+  /** The rename maps in force between `lo`'s version and `hi`, oldest
+    * first — one (composed) map per [[Snapshot.eraKey]] run that
+    * carries one (see [[Snapshot.eraL2P]] for why the grouping is by
+    * era run). A MANIFEST chain is ONE era regardless of version dirs:
+    * per-version dirs must not multiply the fold (a swap rename folded
+    * twice is the identity). */
+  private def eraMaps(lo: Snapshot, hi: Long): Seq[Map[String, String]] = {
     val runs = scala.collection.mutable.ArrayBuffer.empty[
       (String, Map[String, String])]
-    (lo to hi).foreach { x =>
-      // a MANIFEST chain is ONE map era regardless of version dirs:
-      // physical names are stable across the whole chain and each
-      // commit re-persists the same COMPOSED map (a new rename
-      // replaces it, exactly like a map replacing within a plain-dir
-      // era) — per-version dirs must not multiply the fold
-      val d =
-        if (manifestOf(fs, root, x).isDefined) s"$root#manifest-era"
-        else dataPath(spark, root, x)
-      val m = columnMapping(fs, root, x)
+    (lo.version to hi).foreach { x =>
+      val s = if (x == lo.version) lo else snapshot(lo.spark, lo.root, x)
       runs.lastOption match {
-        case Some((pd, _)) if pd == d =>
-          if (m.nonEmpty) runs(runs.size - 1) = (d, m)
-        case _ => runs += ((d, m))
+        case Some((pd, _)) if pd == s.eraKey =>
+          if (s.p2l.nonEmpty) runs(runs.size - 1) = (s.eraKey, s.p2l)
+        case _ => runs += ((s.eraKey, s.p2l))
       }
     }
     runs.map(_._2).filter(_.nonEmpty).toSeq
   }
 
-
-  /** Version `v` read under the `eraOf`-era LOGICAL schema — the read
+  /** Version `s` read under the `eraOf`-era LOGICAL schema — the read
     * every cross-version comparison must use:
-    *  - the rename-map CHAIN between `v` and `eraOf` translated
-    *    ([[eraL2P]]; files read under their PHYSICAL names, the
-    *    caller's names come out — a direct explicit-schema read
+    *  - the rename-map CHAIN between `s` and `eraOf` translated
+    *    ([[Snapshot.eraL2P]]; files read under their PHYSICAL names,
+    *    the caller's names come out — a direct explicit-schema read
     *    across a rename silently NULL-FILLS the renamed columns);
-    *  - translation VALIDATED against the data files' footer schema
-    *    (one driver-side footer read), so an untranslatable column —
-    *    e.g. a vacuumed intermediate rename version whose map is
-    *    gone — fails loudly instead of null-filling;
+    *  - translation VALIDATED by the rename-era guard
+    *    ([[Snapshot.eraBreak]], one driver-side footer read), so an
+    *    untranslatable column — e.g. a vacuumed intermediate rename
+    *    version whose map is gone — fails loudly instead of
+    *    null-filling;
     *  - deletion vectors applied when `applyDvs` (diffs of LIVE
     *    states) or left in place when not ([[publishChangeFeed]]'s
     *    determinism, [[mergeBranch]]'s base sides).
-    * Shared by [[diff]], [[publishChangeFeed]] and [[mergeBranch]]. */
-  private def liveEraSnap(spark: SparkSession, root: String, v: Long,
-      schema: org.apache.spark.sql.types.StructType,
+    * Shared by [[diff]], [[publishChangeFeed]], [[mergeBranch]] and
+    * [[readVersionLive]]. */
+  private def liveEraSnap(s: Snapshot, schema: StructType,
       applyDvs: Boolean = true, eraOf: Option[Long] = None): DataFrame = {
     import org.apache.spark.sql.functions._
-    val l2p = eraL2P(spark, root, v, eraOf.getOrElse(v), schema.fieldNames.toSeq)
-    val phys = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
+    val l2p = s.eraL2P(eraOf.getOrElse(s.version), schema.fieldNames.toSeq)
+    val phys = StructType(schema.fields.map(f =>
       f.copy(name = l2p.getOrElse(f.name, f.name))))
-    // loud null-fill guard with the RENAME signature (a pinned column
-    // missing from the files WHILE the files carry an unclaimed one):
-    // an untranslated rename would null-fill silently. Missing-only is
-    // the legal ADD-COLUMNS widening — reading a pre-widening version
-    // under the widened schema null-fills the new columns BY CONTRACT
-    // (diff/feeds across a widening boundary must keep working).
-    val onDisk = effectiveSchema(spark, root, v).fieldNames.toSet
-    val missing = phys.fieldNames.filterNot(onDisk.contains)
-    if (missing.nonEmpty && (onDisk -- phys.fieldNames).nonEmpty)
+    s.eraBreak(phys.fieldNames.toSeq).foreach { case (missing, _) =>
       throw new IllegalStateException(
-        s"liveEraSnap: version v$v of $root has no column(s)" +
-          s" ${missing.mkString(", ")} under era-v${eraOf.getOrElse(v)}" +
+        s"liveEraSnap: version v${s.version} of ${s.root} has no column(s)" +
+          s" ${missing.mkString(", ")} under era-v${eraOf.getOrElse(s.version)}" +
           " logical names — rename chain untranslatable (vacuumed rename" +
           " version?) or the caller's schema is from a different era")
+    }
     // manifest or plain, the read resolves the version's own file set;
     // applyDvs=false callers skip the vectors (feed purity)
-    val live =
-      if (applyDvs) readLive(spark, root, v, phys)
-      else readSnapshot(spark, root, v, phys)
+    val live = if (applyDvs) readLive(s, phys) else s.frame(phys)
     // normalize to DECLARED order even with no rename map: a
     // hive-partitioned dir read surfaces partition columns appended
     // last, and a feed diff against a declared-order side would
@@ -1739,16 +1735,17 @@ object Warehouse {
     // whose content must not depend on renames that happen after its
     // version — a late (crash-recovery) re-publish must produce the
     // byte-same feed the original would have.
-    def snap(x: Long) =
-      liveEraSnap(spark, root, x, schema, applyDvs = false, eraOf = Some(v))
+    val to = snapshot(spark, root, v)
+    val from = snapshot(spark, root, v - 1)
+    def snap(x: Snapshot) =
+      liveEraSnap(x, schema, applyDvs = false, eraOf = Some(v))
     val stage = new Path(
       s"$root/_changes/.v${v}_${java.util.UUID.randomUUID().toString}")
     // METADATA-ONLY versions (rename/clone pointers resolving to the
     // predecessor's data dir) changed no rows: their feed is EMPTY by
     // construction — publish it as such so CDC consumers advance past
     // the version instead of stalling at a feed gap.
-    val metadataOnly =
-      dataPath(spark, root, v) == dataPath(spark, root, v - 1)
+    val metadataOnly = to.dataDir == from.dataDir
     // O(Δ) FAST PATH for a MANIFEST APPEND: when v's manifest carries
     // every one of v-1's files by reference (pure append — nothing
     // rewritten or removed), the feed is computable from the NEW files
@@ -1760,19 +1757,17 @@ object Warehouse {
     // read of the DELTA + one broadcast-semi probe instead of two
     // full-snapshot scans and a full-width shuffle join.
     def manifestAppendFeed: Option[DataFrame] =
-      manifestOf(fs, root, v).flatMap { toLines =>
+      to.manifest.flatMap { toLines =>
         import org.apache.spark.sql.functions.{broadcast, col}
-        val toPaths = toLines.map(_.split("\t", 2).head).toSet
-        val fromPaths: Option[Set[String]] =
-          manifestOf(fs, root, v - 1) match {
-            case Some(lines) => Some(lines.map(_.split("\t", 2).head).toSet)
-            case None => scala.util.Try(
-              dataFileEntries(spark, root, v - 1).map { case (abs, _, _) =>
-                relativeToRoot(fs, root, abs) }.toSet).toOption
-          }
-        fromPaths.filter(_.subsetOf(toPaths)).map { from =>
-          val newRel = (toPaths -- from).toSeq.sorted
-          if (newRel.isEmpty) diffImages(snap(v), snap(v), keyCols).limit(0)
+        def paths(lines: Seq[String]) = lines.map(_.split("\t", 2).head).toSet
+        val toPaths = paths(toLines)
+        // a plain v-1 lists its dir (the zero-copy conversion); a
+        // clone's files keep absolute paths, never a subset
+        val fromPaths: Option[Set[String]] = from.manifest.map(paths)
+          .orElse(scala.util.Try(paths(from.files.map(_.line))).toOption)
+        fromPaths.filter(_.subsetOf(toPaths)).map { old =>
+          val newRel = (toPaths -- old).toSeq.sorted
+          if (newRel.isEmpty) diffImages(snap(to), snap(to), keyCols).limit(0)
           else {
             // index-backed delta read: partition columns resolve from
             // the path fragments (a raw file read would null-fill
@@ -1780,17 +1775,15 @@ object Warehouse {
             // and a carried rename map reads PHYSICAL then surfaces
             // the feed's era-v LOGICAL names (a logical-schema'd read
             // would null-fill every renamed column)
-            val l2p = columnMapping(fs, root, v).map(_.swap)
-            val physSchema = org.apache.spark.sql.types.StructType(
-              schema.fields.map(f =>
-                f.copy(name = l2p.getOrElse(f.name, f.name))))
-            val newRows0 = readManifestFiles(spark, root, v, newRel.toSet,
-              physSchema)
+            val l2p = to.l2p
+            val physSchema = StructType(schema.fields.map(f =>
+              f.copy(name = l2p.getOrElse(f.name, f.name))))
+            val newRows0 = to.filesFrame(newRel.toSet, physSchema)
             val newRows =
               if (l2p.isEmpty) newRows0
               else newRows0.select(schema.fieldNames.toSeq.map(n =>
                 col(s"`${l2p.getOrElse(n, n)}`").as(n)): _*)
-            val oldSide = snap(v - 1).join(
+            val oldSide = snap(from).join(
               broadcast(newRows.select(keyCols.map(col): _*).distinct()),
               keyCols, "left_semi")
             diffImages(oldSide, newRows, keyCols)
@@ -1798,9 +1791,9 @@ object Warehouse {
         }
       }
     val feed =
-      if (metadataOnly) diffImages(snap(v), snap(v), keyCols).limit(0)
+      if (metadataOnly) diffImages(snap(to), snap(to), keyCols).limit(0)
       else manifestAppendFeed.getOrElse(
-        diffImages(snap(v - 1), snap(v), keyCols))
+        diffImages(snap(from), snap(to), keyCols))
     feed.write.mode("overwrite").parquet(stage.toString)
     if (complete) { fs.delete(stage, true); return target.toString }
     if (fs.exists(target)) fs.delete(target, true) // incomplete orphan
@@ -1868,17 +1861,16 @@ object Warehouse {
       throw new IllegalStateException(s"restore: no committed snapshot under $root"))
     require(toVersion != cur,
       s"restore: v$toVersion is already the current version")
-    val fs = Ingest.fs(spark, root)
-    val src = new Path(dataPath(spark, root, toVersion))
-    if (!fs.exists(new Path(src, "_SUCCESS")))
+    val s = snapshot(spark, root, toVersion)
+    if (!s.complete)
       throw new IllegalStateException(
         s"restore: no complete snapshot v$toVersion under $root" +
           " (vacuumed past the retention floor?)")
     // MANIFEST versions restore through the file-list read, their
-    // vectors keyed root-relative ([[snapshotWithPos]]) — a raw dir
-    // read would silently drop every carried-by-reference row and
-    // COMMIT the partial result as the new current version
-    commit(spark, root, readLive(spark, root, toVersion, schema), lockTtlMs,
+    // vectors keyed root-relative ([[withPos]]) — a raw dir read would
+    // silently drop every carried-by-reference row and COMMIT the
+    // partial result as the new current version
+    commit(spark, root, readLive(s, schema), lockTtlMs,
       expectedCurrent = Some(Some(cur)))
   }
 
@@ -1893,7 +1885,7 @@ object Warehouse {
     org.apache.spark.sql.types.StructField("file", org.apache.spark.sql.types.StringType, nullable = false),
     org.apache.spark.sql.types.StructField("pos", org.apache.spark.sql.types.LongType, nullable = false)))
 
-  /** Version `v` with each row's PHYSICAL identity attached — the
+  /** Version `s` with each row's PHYSICAL identity attached — the
     * (file, pos) row id deletion vectors address, so DV deletes need no
     * key column and work on keyless tables too:
     *  - `_dv_file`: a PLAIN version keys files RELATIVE to its data dir
@@ -1914,115 +1906,63 @@ object Warehouse {
     * always "k=v" with '/' hive-escaped) — never by a length count.
     * The key stays URL-ENCODED; [[graft.sources.v2.GraftDvScan]]
     * derives the identical key via SparkPath. */
-  private def snapshotWithPos(spark: SparkSession, root: String, v: Long,
-      schema: org.apache.spark.sql.types.StructType): DataFrame = {
+  private def withPos(s: Snapshot, schema: StructType): DataFrame = {
     import org.apache.spark.sql.functions._
-    val fs = Ingest.fs(spark, root)
     def fenced(dir: String) = "/" + dir.substring(dir.lastIndexOf('/') + 1) + "/"
-    if (manifestOf(fs, root, v).isDefined) {
-      val h = head(spark, root, v)
-      val marker = fenced(fs.makeQualified(new Path(root)).toString.stripSuffix("/"))
-      entriesFrame(spark, h, h.files, schema, withStats = true,
+    if (s.isManifest) {
+      val fs = Ingest.fs(s.spark, s.root)
+      val marker = fenced(fs.makeQualified(new Path(s.root)).toString.stripSuffix("/"))
+      entriesFrame(s.spark, s, s.files, schema, withStats = true,
           withFilePath = true, withPos = true)
         .withColumn("_dv_file", substring_index(col("__file"), marker, -1))
         .withColumnRenamed("__pos", "_dv_pos")
         .drop("__file")
     } else {
-      val dir = dataPath(spark, root, v).stripSuffix("/")
-      readData(spark, root, dir, schema, Seq(
+      val dir = s.dataDir.stripSuffix("/")
+      readData(s.spark, s.root, dir, schema, Seq(
         substring_index(col("_metadata.file_path"), fenced(dir), -1).as("_dv_file"),
         col("_metadata.row_index").as("_dv_pos")))
     }
   }
 
-  /** The merge-on-read anti-join, written once: `withPos` (a
-    * [[snapshotWithPos]] frame of version `v`) minus the rows `dv`
-    * (`v`'s [[dvFrame]]) addresses, identity columns kept. The DV side
-    * is hinted broadcast while its on-disk footprint stays under
-    * `broadcastDvMaxBytes` (one driver metadata listing — no job), so
-    * the join adds NO shuffle of the data; past the bound it plans as
-    * a regular shuffled anti join — correct at any DV size, and
-    * [[applyDv]] is the maintenance valve either way. */
-  private def withoutDeleted(spark: SparkSession, root: String, v: Long,
-      withPos: DataFrame, dv: DataFrame,
+  /** The merge-on-read anti-join, written once: `pos` (a [[withPos]]
+    * frame of `s`) minus the rows `dv` (`s`'s DV frame) addresses,
+    * identity columns kept. The DV side is hinted broadcast while its
+    * on-disk footprint ([[Snapshot.dvBytes]] — complete parts only,
+    * one driver metadata listing, no job) stays under
+    * `broadcastDvMaxBytes`, so the join adds NO shuffle of the data;
+    * past the bound it plans as a regular shuffled anti join — correct
+    * at any DV size, and [[applyDv]] is the maintenance valve either
+    * way. */
+  private def withoutDeleted(s: Snapshot, pos: DataFrame, dv: DataFrame,
       broadcastDvMaxBytes: Long = DvBroadcastMaxBytes): DataFrame = {
-    // size ONLY the complete d_* parts the read consumes — a whole-dir
-    // content summary would also count in-flight `.stage_d_*` staging
-    // dirs from concurrent deleteWhere calls
     val side =
-      if (dvOnDiskBytes(spark, root, v) <= broadcastDvMaxBytes)
-        org.apache.spark.sql.functions.broadcast(dv)
+      if (s.dvBytes <= broadcastDvMaxBytes) org.apache.spark.sql.functions.broadcast(dv)
       else dv
-    withPos.join(side,
-      withPos("_dv_file") === side("file") && withPos("_dv_pos") === side("pos"),
+    pos.join(side,
+      pos("_dv_file") === side("file") && pos("_dv_pos") === side("pos"),
       "left_anti")
   }
 
   private val DvBroadcastMaxBytes: Long = 32L * 1024 * 1024
 
-  /** Version `v`'s LIVE rows under `schema`: its deletion vectors
+  /** Version `s`'s LIVE rows under `schema`: its deletion vectors
     * applied when it has any ([[withoutDeleted]] over the
-    * manifest-or-plain [[snapshotWithPos]]), else the plain
-    * [[readSnapshot]]. */
-  private def readLive(spark: SparkSession, root: String, v: Long,
-      schema: org.apache.spark.sql.types.StructType,
+    * manifest-or-plain [[withPos]]), else the plain
+    * [[Snapshot.frame]]. */
+  private def readLive(s: Snapshot, schema: StructType,
       broadcastDvMaxBytes: Long = DvBroadcastMaxBytes): DataFrame =
-    dvFrame(spark, root, v) match {
-      case None => readSnapshot(spark, root, v, schema)
+    s.dvFrame match {
+      case None => s.frame(schema)
       case Some(dv) =>
-        withoutDeleted(spark, root, v, snapshotWithPos(spark, root, v, schema),
-          dv, broadcastDvMaxBytes).drop("_dv_file", "_dv_pos")
+        withoutDeleted(s, withPos(s, schema), dv, broadcastDvMaxBytes)
+          .drop("_dv_file", "_dv_pos")
     }
 
-  /** Paths of all COMPLETE deletion-vector part dirs for snapshot `v`
-    * (each `d_{uuid}` published by one [[deleteWhere]] call). Excludes
-    * in-flight `.stage_d_*` staging dirs and parts without `_SUCCESS`,
-    * so this is exactly the set a DV read consumes. */
-  private def dvPartDirs(fs: org.apache.hadoop.fs.FileSystem, root: String,
-      v: Long): Seq[Path] = {
-    val dir = new Path(dvPath(root, v))
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("d_") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath)
-  }
-
-  /** Connector-visible era translation ([[graft.sources.v2
-    * .GraftSnapshotSource]]): era-`eraOf` logical name → the name the
-    * same column carries in version `v`'s files ([[eraL2P]]). A
-    * restarted stream may legitimately REPLAY an old batch under a
-    * newly-resolved (post-rename) schema — this is how it finds the
-    * old files' names. */
-  private[graft] def eraTranslation(spark: SparkSession, root: String,
-      v: Long, eraOf: Long, names: Seq[String]): Map[String, String] =
-    eraL2P(spark, root, v, eraOf, names)
-
-  /** Connector-visible column-mapping introspection: version `v`'s
-    * physical→logical rename map (empty when the version carries no
-    * `_MAPPING`). */
-  private[graft] def columnMappingOf(spark: SparkSession, root: String,
-      v: Long): Map[String, String] =
-    columnMapping(Ingest.fs(spark, root), root, v)
-
-  /** Connector-visible DV introspection ([[graft.sources.v2]]'s
-    * merge-on-read scan): the unioned (file, pos) frame and the
-    * on-disk byte size of snapshot `v`'s complete DV parts. */
+  /** Connector-visible DV introspection: the unioned (file, pos) frame
+    * of snapshot `v`'s complete DV parts ([[Snapshot.dvFrame]]). */
   private[graft] def dvRows(spark: SparkSession, root: String,
-      v: Long): Option[DataFrame] = dvFrame(spark, root, v)
-  private[graft] def dvOnDiskBytes(spark: SparkSession, root: String,
-      v: Long): Long = {
-    val fs = Ingest.fs(spark, root)
-    dvPartDirs(fs, root, v).map(p => fs.getContentSummary(p).getLength).sum
-  }
-
-  /** All COMPLETE deletion-vector parts for snapshot `v`, unioned.
-    * None when no delete has ever run against `v`. */
-  private def dvFrame(spark: SparkSession, root: String, v: Long): Option[DataFrame] = {
-    val parts = dvPartDirs(Ingest.fs(spark, root), root, v).map(_.toString)
-    if (parts.isEmpty) None
-    else Some(spark.read.schema(dvSchema).parquet(parts: _*))
-  }
+      v: Long): Option[DataFrame] = snapshot(spark, root, v).dvFrame
 
   /** Row-level DELETE as a MERGE-ON-READ deletion vector — the
     * Delta/Iceberg v2 position-delete shape on plain parquet. Deleting
@@ -2072,15 +2012,13 @@ object Warehouse {
     // with zero rewrite on top of O(Δ) DML, the Delta pairing. A
     // renamed chain refuses (the DV writer addresses physical names;
     // deleteWhereFiles translates, or applyDv/compact first).
-    val isManifest = manifestOf(Ingest.fs(spark, root), root, v).isDefined
-    if (isManifest) require(
-      columnMapping(Ingest.fs(spark, root), root, v).isEmpty,
+    val s = snapshot(spark, root, v)
+    if (s.isManifest) require(s.p2l.isEmpty,
       s"deleteWhere: $root v$v is a RENAMED manifest chain — merge-on-read" +
         " vectors address physical names; use deleteWhereFiles (translates)" +
         " or compact first")
-    val base = snapshotWithPos(spark, root, v, schema)
-    val live = dvFrame(spark, root, v)
-      .fold(base)(withoutDeleted(spark, root, v, base, _))
+    val base = withPos(s, schema)
+    val live = s.dvFrame.fold(base)(withoutDeleted(s, base, _))
     val doomed = live.filter(predicate)
       .select(col("_dv_file").as("file"), col("_dv_pos").as("pos"))
     publishDvPart(spark, root, v, doomed)
@@ -2128,7 +2066,7 @@ object Warehouse {
     currentVersion(spark, root) match {
       case None => spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-      case Some(v) => readLive(spark, root, v, schema, broadcastDvMaxBytes)
+      case Some(v) => readLive(snapshot(spark, root, v), schema, broadcastDvMaxBytes)
     }
 
   /** Fold the current snapshot's deletion vectors into a NEW committed
@@ -2144,16 +2082,14 @@ object Warehouse {
       schema: org.apache.spark.sql.types.StructType = CocoaSchema.warehouse,
       lockTtlMs: Long = DefaultLockTtlMs): Option[Long] =
     currentVersion(spark, root).flatMap { v =>
-      dvFrame(spark, root, v).map { _ =>
+      val s = snapshot(spark, root, v)
+      s.dvFrame.map { _ =>
         // a version carrying BOTH a rename map and vectors folds
         // through the era-aware live read (logical names come out
         // materialized, like compaction); the schema-parameterized
-        // readWithDv stays the unmapped path so declared/widened
+        // live read stays the unmapped path so declared/widened
         // schemas keep their null-fill semantics
-        val live =
-          if (columnMapping(Ingest.fs(spark, root), root, v).isEmpty)
-            readWithDv(spark, root, schema)
-          else readVersionLive(spark, root, v)
+        val live = if (s.p2l.isEmpty) readLive(s, schema) else liveOf(s)
         commit(spark, root, live, lockTtlMs, expectedCurrent = Some(Some(v)))
       }
     }
@@ -2190,8 +2126,8 @@ object Warehouse {
       // snapshot (the maintenance valve the manifest composition
       // contract names), exactly as compaction folds DVs and
       // materializes renames.
-      val bytes = snapshotBytes(spark, root, cur)
-      val n = math.max(1L, (bytes + targetFileBytes - 1L) / targetFileBytes)
+      val s = snapshot(spark, root, cur)
+      val n = math.max(1L, (s.bytes + targetFileBytes - 1L) / targetFileBytes)
       // The snapshot's OWN parquet schema, never a fixed default: a
       // warehouse widened by additive evolution must come out of
       // compaction with every column it carries — a forced older
@@ -2207,8 +2143,7 @@ object Warehouse {
       // expectedCurrent pins the read-modify-write: if any commit
       // lands between resolving `cur` and the lease, publishing would
       // drop it — commit() aborts instead (lost-update fencing).
-      commit(spark, root,
-        readVersionLive(spark, root, cur).repartition(n.toInt),
+      commit(spark, root, liveOf(s).repartition(n.toInt),
         lockTtlMs, expectedCurrent = Some(Some(cur)))
     }
   }
@@ -2318,16 +2253,17 @@ object Warehouse {
     require(targetFileBytes >= 1L,
       s"targetFileBytes must be >= 1, got $targetFileBytes")
     currentVersion(spark, root).map { cur =>
-      val bytes = snapshotBytes(spark, root, cur)
-      val n = math.max(1L, (bytes + targetFileBytes - 1L) / targetFileBytes)
+      val s = snapshot(spark, root, cur)
+      val n = math.max(1L, (s.bytes + targetFileBytes - 1L) / targetFileBytes)
       // LIVE read — same contract as [[compact]]: fold deletion
       // vectors, materialize logical names (the cluster columns are
       // logical names too), fold manifests into one plain snapshot.
-      val df = readVersionLive(spark, root, cur)
+      val df = liveOf(s)
       val v = commit(spark, root,
         graft.operators.Zorder.cluster(df, colA, colB, n.toInt),
         lockTtlMs, expectedCurrent = Some(Some(cur)))
-      graft.sources.ZoneMap.build(spark, dataPath(spark, root, v),
+      // a fresh commit is always its own data dir
+      graft.sources.ZoneMap.build(spark, versionPath(root, v),
         df.schema, Seq(colA, colB))
       v
     }
@@ -2403,10 +2339,10 @@ object Warehouse {
     // base reads correctly under the caller's current names.
     def sideEra(root: String) = currentVersion(spark, root)
     def snap(root: String, v: Long) =
-      liveEraSnap(spark, root, v, schema, eraOf = sideEra(root))
+      liveEraSnap(snapshot(spark, root, v), schema, eraOf = sideEra(root))
         .select(schema.fieldNames.map(col).toSeq: _*)
     def snapBase(root: String, v: Long) =
-      liveEraSnap(spark, root, v, schema, applyDvs = false,
+      liveEraSnap(snapshot(spark, root, v), schema, applyDvs = false,
           eraOf = sideEra(root))
         .select(schema.fieldNames.map(col).toSeq: _*)
     // merge base: per side. First merge diffs both sides against the
@@ -2567,14 +2503,13 @@ object Warehouse {
     val (root, v) = snapshotGroupMembers(spark, groupDir).getOrElse(name,
       throw new IllegalArgumentException(
         s"snapshot group $groupDir has no member '$name'"))
-    val fs = Ingest.fs(spark, root)
-    val dir = dataPath(spark, root, v)
-    if (!fs.exists(new Path(dir, "_SUCCESS")))
+    val s = snapshot(spark, root, v)
+    if (!s.complete)
       throw new IllegalStateException(
         s"snapshot group $groupDir pins $name at $root v$v, which is missing" +
           " or incomplete (vacuumed past its retention floor?) — republish" +
           " the group or restore the member")
-    readSnapshot(spark, root, v, schema)
+    s.frame(schema)
   }
 
   /** Drop old snapshots, subject to a RETENTION FLOOR — the contract

@@ -214,7 +214,7 @@ class GraftCatalog extends TableCatalog {
           props(GraftTables.MergeKey) = to
         Warehouse.currentVersion(spark, root) match {
           case Some(cur) =>
-            val phys = Warehouse.readVersionRaw(spark, root, cur).schema
+            val phys = Warehouse.snapshot(spark, root, cur).schema
             val renamedV = Warehouse.renameColumns(spark, root, Map(from -> to), phys)
             // auto-CDF tables: publish the rename version's (EMPTY)
             // feed immediately — no rows changed, but a feed GAP
@@ -291,30 +291,18 @@ object GraftCatalog {
     val fs = GraftTables.fs(spark, root)
     val p = new Path(root, PropsSidecar)
     if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val text =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-        finally in.close()
-      text.linesIterator.filter(_.contains('=')).map { line =>
+    else graft.pipeline.Ingest.readText(fs, p).linesIterator
+      .filter(_.contains('=')).map { line =>
         val i = line.indexOf('=')
         line.take(i) -> line.drop(i + 1).trim
       }.toMap
-    }
   }
 
   def readSchemaSidecar(spark: SparkSession, root: String): Option[StructType] = {
     val fs = GraftTables.fs(spark, root)
     val p = new Path(root, SchemaSidecar)
     if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val json =
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          StandardCharsets.UTF_8)
-        finally in.close()
-      Some(org.apache.spark.sql.types.DataType.fromJson(json).asInstanceOf[StructType])
-    }
+    else Some(org.apache.spark.sql.types.DataType.fromJson(
+      graft.pipeline.Ingest.readText(fs, p)).asInstanceOf[StructType])
   }
 }

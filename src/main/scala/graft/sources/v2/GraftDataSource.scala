@@ -285,33 +285,23 @@ object GraftTables {
   }
 
   /** Resolve `root` at `versionAsOf` (default: current) into a
-    * readable+writable table. Correct-or-loud, matching the
-    * Warehouse API paths:
+    * readable+writable table over one [[Warehouse.Snapshot]].
+    * Correct-or-loud, matching the Warehouse API paths:
     *  - no committed snapshot and no [[GraftCatalog]] schema sidecar
     *    → error, never an empty scan of nothing;
     *  - requested version incomplete/missing → error;
-    *  - snapshot carrying DELETION VECTORS → error ("read via
-    *    Warehouse.readWithDv or applyDv first"): the raw parquet scan
-    *    would silently resurrect deleted rows, the one failure mode a
-    *    lakehouse read path must never have ([[Warehouse.dvPath]]);
-    *  - `_CLONE` indirection resolves through [[Warehouse.dataPath]],
-    *    which is loud when the clone's source was vacuumed.
+    *  - snapshot carrying complete DELETION-VECTOR parts → the
+    *    merge-on-read [[GraftDvScan]] (a raw parquet scan would
+    *    silently resurrect deleted rows); an in-flight or crashed
+    *    staging part never counts ([[Warehouse.Snapshot.dvParts]]);
+    *  - `_CLONE` indirection resolves through the snapshot's data dir,
+    *    loud when the clone's source was vacuumed.
     */
   def snapshotTable(spark: SparkSession, root: String, versionAsOf: Option[Long],
       mergeKey: Option[String], tableName: String,
       fallbackSchema: Option[StructType] = None): Table = {
-    val fs = GraftTables.fs(spark, root)
     val current = Warehouse.currentVersion(spark, root)
-    val version = versionAsOf match {
-      case Some(v) =>
-        require(fs.exists(new Path(Warehouse.versionPath(root, v), "_SUCCESS")) ||
-          fs.exists(new Path(Warehouse.versionPath(root, v), "_CLONE")),
-          s"graft: version $v of $root is missing or incomplete" +
-            current.map(c => s" (current is v$c)").getOrElse(""))
-        Some(v)
-      case None => current
-    }
-    version match {
+    versionAsOf.orElse(current) match {
       case None =>
         // No data yet: readable/writable if the catalog declared a
         // schema at CREATE TABLE time ([[GraftCatalog.SchemaSidecar]])
@@ -325,147 +315,117 @@ object GraftTables {
             new GraftSnapshotTable(tableName, spark, root, schema, None, mergeKey)
           case None => new GraftBootstrapTable(tableName, root)
         }
-      case Some(v) if Warehouse.manifestOf(fs, root, v).isDefined =>
-        // MANIFEST version: the snapshot is a FILE LIST (O(Δ) DML —
-        // [[Warehouse.appendFiles]] family); DVs and rename maps are
-        // refused at commit time, so the builtin vectorized parquet
-        // scan over the listed files owns the read. HIVE PARTITIONING
-        // composes: _MANIFEST_PARTS names the columns, the file paths
-        // carry the values, and [[ManifestFileIndex]] serves both.
-        // Zone-map sidecars are dir-scoped and do not apply.
-        // the schema PERSISTED at commit time — a widened manifest
-        // chain has MIXED footers (inference would sample one
-        // nondeterministically) and an emptied one has none at all.
-        // ALTER TABLE ADD COLUMNS widening layers on top exactly as
-        // for plain versions; a manifest-CARRIED rename map (round 13)
-        // means stored names are PHYSICAL while the sidecar's are
-        // LOGICAL — the coverage check compares in LOGICAL space and a
-        // winning sidecar translates BACK to physical names (the plain
-        // branch's exact rules, same collision refusal).
-        val stored = Warehouse.effectiveSchema(spark, root, v)
-        val mapping = Warehouse.columnMappingOf(spark, root, v)
-        val l2p = mapping.map(_.swap)
-        val schema = GraftCatalog.readSchemaSidecar(spark, root)
-          .filter(d => stored.fields.forall(f =>
-            d.fields.exists(df =>
-              df.name == mapping.getOrElse(f.name, f.name) &&
-                df.dataType == f.dataType)) &&
-            d.length > stored.length)
-          .map { d =>
-            val dPhys = StructType(d.fields.map(f =>
-              f.copy(name = l2p.getOrElse(f.name, f.name))))
-            require(dPhys.fieldNames.distinct.length == dPhys.fieldNames.length,
-              s"graft: declared column(s) of $root collide with the physical" +
-                s" name of a renamed column (${dPhys.fieldNames.mkString(", ")})" +
-                " — rename or drop the colliding declared column first")
-            dPhys
-          }
-          .getOrElse(stored)
-        // logical twin of the (physical) resolved schema
-        val exposed =
-          if (mapping.isEmpty) schema
-          else StructType(schema.fields.map(f =>
-            f.copy(name = mapping.getOrElse(f.name, f.name))))
-        val parts = Warehouse.manifestParts(fs, root, v)
-        val missing = parts.filterNot(schema.fieldNames.contains)
-        require(missing.isEmpty, s"graft: $root v$v partitions by" +
-          s" (${missing.mkString(", ")}) absent from its schema —" +
-          " _MANIFEST_PARTS and _MANIFEST_SCHEMA disagree")
-        Warehouse.dataFileEntries(spark, root, v) match {
-          case Seq() =>
-            require(schema.nonEmpty, s"graft: $root v$v lists no files and" +
-              " persists no schema — declare one via CREATE TABLE")
-            // an EMPTIED manifest chain (delete-everything) keeps its
-            // carried map and partitioning: the table must still
-            // surface LOGICAL names and its layout, or a later INSERT
-            // naming the renamed column fails against physical names
-            new GraftSnapshotTable(tableName, spark, root, exposed, None,
-              mergeKey, resolvedVersion = Some(v), mapping = mapping,
-              manifestPartCols = parts)
-          case entries =>
-            // the scan plans over the manifest-backed index: zero
-            // listing, zero stat calls, per-file min/max DATA SKIPPING
-            // from the persisted stats, and partition pruning from the
-            // path-fragment partition spec ([[ManifestFileIndex]]).
-            // NO inner ParquetTable: its lazy InMemoryFileIndex would
-            // stat every listed file at resolution — the exact
-            // O(files) cost the manifest exists to remove. The scan
-            // runs under PHYSICAL names; a carried rename map wraps it
-            // in [[GraftMappedScanBuilder]] (the plain-branch shape).
-            val partSchema = StructType(
-              parts.map(p => schema.fields(schema.fieldIndex(p))))
-            // DELETION VECTORS compose with manifest versions (round
-            // 13): an in-place merge-on-read delete routes the read
-            // through [[GraftDvScan]] over the manifest's OWN file
-            // list (never a root listing — other versions' files live
-            // there too), DV keys root-relative
-            val dvDir = new Path(Warehouse.dvPath(root, v))
-            val hasDv = fs.exists(dvDir) && fs.listStatus(dvDir).nonEmpty
-            new GraftSnapshotTable(tableName, spark, root, exposed, None,
-              mergeKey, resolvedVersion = Some(v), mapping = mapping,
-              dvVersion = if (hasDv) Some(v) else None,
-              manifestIndex = Some(new ManifestFileIndex(spark, root, entries,
-                Warehouse.dataFileStats(spark, root, v), partSchema)),
-              manifestPartCols = parts,
-              manifestDvEntries = if (hasDv) Some(entries) else None)
-        }
       case Some(v) =>
-        val dvDir = new Path(Warehouse.dvPath(root, v))
-        val hasDv = fs.exists(dvDir) && fs.listStatus(dvDir).nonEmpty
-        // renamed versions read through [[GraftMappedScan]] (logical
-        // names over untouched physical bytes); a version carrying a
-        // rename map AND deletion vectors composes both wrappers —
-        // [[GraftDvScanBuilder]] receives the map and translates at
-        // its reader boundary
-        val mapping = Warehouse.columnMappingOf(spark, root, v)
-        val dataDir = Warehouse.dataPath(spark, root, v)
-        val inferred = ParquetTable(s"$tableName@v$v", classic(spark),
-          CaseInsensitiveStringMap.empty(), Seq(dataDir), None,
-          classOf[ParquetFileFormat])
-        // Schema evolution (ALTER TABLE ADD COLUMNS): a declared
-        // `_SCHEMA` sidecar that is a SUPERSET of the files' schema is
-        // the table's schema — files missing the added columns read
-        // them as NULL. A sidecar that does NOT cover the files (e.g.
-        // stale after API-side commits widened the data directly)
-        // must never win: it would silently HIDE committed columns.
-        // The sidecar holds LOGICAL names while footers hold PHYSICAL
-        // ones — the coverage check compares in logical space (a
-        // sidecar-widened column must survive a later RENAME COLUMN),
-        // and a winning sidecar is translated BACK to physical names
-        // for the inner parquet table ([[GraftMappedScan]] re-surfaces
-        // the logical names above it).
-        val l2p = mapping.map(_.swap)
-        val declared = GraftCatalog.readSchemaSidecar(spark, root).filter(d =>
-          inferred.schema.fields.forall { f =>
-            val logicalName = mapping.getOrElse(f.name, f.name)
-            d.fields.exists(df => df.name == logicalName && df.dataType == f.dataType)
-          } && d.length > inferred.schema.length)
-        val inner = declared match {
-          case Some(d) =>
-            val dPhys = StructType(d.fields.map(f =>
-              f.copy(name = l2p.getOrElse(f.name, f.name))))
-            require(dPhys.fieldNames.distinct.length == dPhys.fieldNames.length,
-              s"graft: declared column(s) of $root collide with the physical" +
-                s" name of a renamed column (${dPhys.fieldNames.mkString(", ")})" +
-                " — rename or drop the colliding declared column first")
-            ParquetTable(s"$tableName@v$v", classic(spark),
-              CaseInsensitiveStringMap.empty(), Seq(dataDir), Some(dPhys),
-              classOf[ParquetFileFormat])
-          case None => inferred
-        }
-        // A DV-bearing snapshot reads MERGE-ON-READ through
-        // [[GraftDvScan]] (the Delta reader shape), hive-partitioned
-        // layouts included (partition values re-derived per file); a
-        // renamed snapshot reads through [[GraftMappedScan]], its
-        // partitioning surfaced under logical names.
-        val exposed =
-          if (mapping.isEmpty) inner.schema
-          else StructType(inner.schema.fields.map(f =>
-            f.copy(name = mapping.getOrElse(f.name, f.name))))
-        new GraftSnapshotTable(tableName, spark, root, exposed, Some(inner),
-          mergeKey, dataDir = Some(dataDir), resolvedVersion = Some(v),
-          dvVersion = if (hasDv) Some(v) else None, mapping = mapping)
+        val snap = Warehouse.snapshot(spark, root, v)
+        if (versionAsOf.isDefined)
+          snap.requireComplete("graft",
+            current.map(c => s" (current is v$c)").getOrElse(""))
+        if (snap.isManifest) manifestTable(spark, snap, mergeKey, tableName)
+        else plainTable(spark, snap, mergeKey, tableName)
     }
+  }
+
+  /** Schema evolution (ALTER TABLE ADD COLUMNS): a declared `_SCHEMA`
+    * sidecar that is a SUPERSET of the version's `stored` (physical)
+    * schema is the table's schema — files missing the added columns
+    * read them as NULL. A sidecar that does NOT cover the stored
+    * columns (e.g. stale after API-side commits widened the data
+    * directly) must never win: it would silently HIDE committed
+    * columns. The sidecar holds LOGICAL names while `stored` holds
+    * PHYSICAL ones — the coverage check compares in logical space (a
+    * sidecar-widened column must survive a later RENAME COLUMN), and a
+    * winning sidecar comes back under PHYSICAL names (the scans
+    * re-surface the logical ones above them). */
+  private def declaredWidening(spark: SparkSession, snap: Warehouse.Snapshot,
+      stored: StructType): Option[StructType] =
+    GraftCatalog.readSchemaSidecar(spark, snap.root)
+      .filter(d => stored.fields.forall(f =>
+        d.fields.exists(df =>
+          df.name == snap.p2l.getOrElse(f.name, f.name) &&
+            df.dataType == f.dataType)) &&
+        d.length > stored.length)
+      .map { d =>
+        val dPhys = StructType(d.fields.map(f =>
+          f.copy(name = snap.l2p.getOrElse(f.name, f.name))))
+        require(dPhys.fieldNames.distinct.length == dPhys.fieldNames.length,
+          s"graft: declared column(s) of ${snap.root} collide with the physical" +
+            s" name of a renamed column (${dPhys.fieldNames.mkString(", ")})" +
+            " — rename or drop the colliding declared column first")
+        dPhys
+      }
+
+  /** MANIFEST version: the snapshot is a FILE LIST (O(Δ) DML —
+    * [[Warehouse.appendFiles]] family), read through the builtin
+    * vectorized parquet scan over the listed files. HIVE PARTITIONING
+    * composes: _MANIFEST_PARTS names the columns, the file paths carry
+    * the values, and [[ManifestFileIndex]] serves both. Zone-map
+    * sidecars are dir-scoped and do not apply. The stored schema is
+    * the one PERSISTED at commit time — a widened manifest chain has
+    * MIXED footers (inference would sample one nondeterministically)
+    * and an emptied one has none at all. */
+  private def manifestTable(spark: SparkSession, snap: Warehouse.Snapshot,
+      mergeKey: Option[String], tableName: String): Table = {
+    val (root, v) = (snap.root, snap.version)
+    val schema = declaredWidening(spark, snap, snap.schema).getOrElse(snap.schema)
+    // logical twin of the (physical) resolved schema
+    val exposed = snap.logical(schema)
+    val parts = snap.parts
+    val missing = parts.filterNot(schema.fieldNames.contains)
+    require(missing.isEmpty, s"graft: $root v$v partitions by" +
+      s" (${missing.mkString(", ")}) absent from its schema —" +
+      " _MANIFEST_PARTS and _MANIFEST_SCHEMA disagree")
+    if (snap.files.isEmpty) {
+      require(schema.nonEmpty, s"graft: $root v$v lists no files and" +
+        " persists no schema — declare one via CREATE TABLE")
+      // an EMPTIED manifest chain (delete-everything) keeps its
+      // carried map and partitioning: the table must still surface
+      // LOGICAL names and its layout, or a later INSERT naming the
+      // renamed column fails against physical names
+      new GraftSnapshotTable(tableName, spark, root, exposed, None,
+        mergeKey, Some(snap))
+    } else {
+      // the scan plans over the manifest-backed index: zero listing,
+      // zero stat calls, per-file min/max DATA SKIPPING from the
+      // persisted stats, and partition pruning from the path-fragment
+      // partition spec ([[ManifestFileIndex]]). NO inner ParquetTable:
+      // its lazy InMemoryFileIndex would stat every listed file at
+      // resolution — the exact O(files) cost the manifest exists to
+      // remove. The scan runs under PHYSICAL names; a carried rename
+      // map wraps it in [[GraftMappedScanBuilder]]. DELETION VECTORS
+      // compose (round 13): an in-place merge-on-read delete routes the
+      // read through [[GraftDvScan]] over the manifest's OWN file list
+      // (never a root listing — other versions' files live there too),
+      // DV keys root-relative.
+      val partSchema = StructType(
+        parts.map(p => schema.fields(schema.fieldIndex(p))))
+      new GraftSnapshotTable(tableName, spark, root, exposed, None,
+        mergeKey, Some(snap), Some(new ManifestFileIndex(spark, root,
+          snap.files.map(e => (e.path, e.size, e.mtime)), snap.stats, partSchema)))
+    }
+  }
+
+  /** PLAIN (or clone / renamed) version: the builtin [[ParquetTable]]
+    * over the snapshot's data dir, with its own lazy footer inference,
+    * zone maps and dynamic partition pruning. A DV-bearing snapshot
+    * reads MERGE-ON-READ through [[GraftDvScan]] (the Delta reader
+    * shape), hive-partitioned layouts included (partition values
+    * re-derived per file); a renamed snapshot reads through
+    * [[GraftMappedScan]] (logical names over untouched physical
+    * bytes), its partitioning surfaced under logical names; a version
+    * carrying both composes the wrappers — [[GraftDvScanBuilder]]
+    * receives the map and translates at its reader boundary. */
+  private def plainTable(spark: SparkSession, snap: Warehouse.Snapshot,
+      mergeKey: Option[String], tableName: String): Table = {
+    val v = snap.version
+    def parquetTable(schema: Option[StructType]) =
+      ParquetTable(s"$tableName@v$v", classic(spark),
+        CaseInsensitiveStringMap.empty(), Seq(snap.dataDir), schema,
+        classOf[ParquetFileFormat])
+    val inferred = parquetTable(None)
+    val inner = declaredWidening(spark, snap, inferred.schema)
+      .map(d => parquetTable(Some(d))).getOrElse(inferred)
+    new GraftSnapshotTable(tableName, spark, snap.root,
+      snap.logical(inner.schema), Some(inner), mergeKey, Some(snap))
   }
 }
 
@@ -496,16 +456,19 @@ object GraftTables {
 class GraftSnapshotTable(tableName: String,
     private[v2] val spark: SparkSession, private[v2] val root: String,
     tableSchema: StructType, inner: Option[ParquetTable],
-    mergeKeyOpt: Option[String], dataDir: Option[String] = None,
-    private[v2] val resolvedVersion: Option[Long] = None,
-    dvVersion: Option[Long] = None,
-    mapping: Map[String, String] = Map.empty,
-    manifestIndex: Option[ManifestFileIndex] = None,
-    manifestPartCols: Seq[String] = Seq.empty,
-    manifestDvEntries: Option[Seq[(String, Long, Long)]] = None)
+    mergeKeyOpt: Option[String], snap: Option[Warehouse.Snapshot] = None,
+    manifestIndex: Option[ManifestFileIndex] = None)
     extends Table with SupportsRead with SupportsWrite
     with org.apache.spark.sql.connector.catalog.SupportsDelete
     with org.apache.spark.sql.connector.catalog.SupportsRowLevelOperations {
+
+  // the resolved version's facts (none for a declared-but-empty table)
+  private[v2] def resolvedVersion: Option[Long] = snap.map(_.version)
+  private val mapping: Map[String, String] = snap.fold(Map.empty[String, String])(_.p2l)
+  private val manifestPartCols: Seq[String] =
+    snap.filter(_.isManifest).fold(Seq.empty[String])(_.parts)
+  private def dataDir: Option[String] = snap.filter(!_.isManifest).map(_.dataDir)
+  private def dvSnapshot: Option[Warehouse.Snapshot] = snap.filter(_.dvParts.nonEmpty)
 
   override def name(): String = tableName
   override def schema(): StructType = tableSchema
@@ -517,7 +480,7 @@ class GraftSnapshotTable(tableName: String,
     GraftCatalog.readProps(spark, root).asJava
 
   override def partitioning(): Array[Transform] =
-    if (manifestIndex.isDefined || manifestPartCols.nonEmpty)
+    if (snap.exists(_.isManifest))
       // from the _MANIFEST_PARTS sidecar — never the inner table
       // (there is none for manifest versions; an inferred one would
       // stat every listed file); a carried rename map surfaces the
@@ -568,7 +531,7 @@ class GraftSnapshotTable(tableName: String,
       TableCapability.TRUNCATE)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    if (manifestDvEntries.isDefined && dvVersion.isDefined) {
+    if (manifestIndex.isDefined && dvSnapshot.isDefined) {
       // DV-bearing MANIFEST version: the merge-on-read scan owns the
       // read over the manifest's explicit file list; keys are
       // root-relative, so the "data dir" handed to the key/partition
@@ -580,11 +543,10 @@ class GraftSnapshotTable(tableName: String,
       def relax(st: StructType) = StructType(st.fields.map(_.copy(nullable = true)))
       val partSchema = StructType(manifestPartCols.map(p =>
         tableSchema.fields(tableSchema.fieldIndex(p))))
-      new GraftDvScanBuilder(spark, root, dvVersion.get,
+      new GraftDvScanBuilder(spark, dvSnapshot.get,
         GraftTables.fs(spark, root).makeQualified(
           new org.apache.hadoop.fs.Path(root)).toString,
-        relax(tableSchema), relax(partSchema),
-        mapping, explicitFiles = manifestDvEntries)
+        relax(tableSchema), relax(partSchema), mapping)
     } else if (manifestIndex.isDefined) {
       // manifest snapshot: the builtin parquet scan plans over the
       // MANIFEST-BACKED file index — zero listing / per-file stats,
@@ -613,14 +575,14 @@ class GraftSnapshotTable(tableName: String,
       // DV-bearing snapshot: the merge-on-read scan OWNS the read —
       // the builtin parquet scan (zone maps and DPP included) would
       // resurrect deleted rows.
-      case Some(t) if dvVersion.isDefined =>
+      case Some(t) if dvSnapshot.isDefined =>
         // partition schema under LOGICAL names; the DV scan translates
         // physical-ward at its reader boundary (rename composition)
         val physPart = StructType(t.schema.fields.filterNot(f =>
           t.dataSchema.fieldNames.contains(f.name)))
         val partSchema = StructType(physPart.fields.map(f =>
           f.copy(name = mapping.getOrElse(f.name, f.name))))
-        new GraftDvScanBuilder(spark, root, dvVersion.get, dataDir.get,
+        new GraftDvScanBuilder(spark, dvSnapshot.get, dataDir.get,
           tableSchema, partSchema, mapping)
       // renamed snapshot: the builtin scan runs under PHYSICAL names,
       // the wrapper translates at the plan boundary (zone-map sidecars
@@ -691,9 +653,9 @@ class GraftSnapshotTable(tableName: String,
     // containing a conflicting key are rewritten) and a keyless one
     // appends new files by reference. Overwrite replaces wholesale
     // either way (a fresh snapshot is already O(new data)).
-    val manifestMode = baseVersion.exists(v =>
-      Warehouse.manifestOf(GraftTables.fs(spark, root), root, v).isDefined) ||
-      GraftCatalog.readProps(spark, root).get("commitMode").contains("manifest")
+    val manifestMode =
+      baseVersion.exists(Warehouse.snapshot(spark, root, _).isManifest) ||
+        GraftCatalog.readProps(spark, root).get("commitMode").contains("manifest")
     if (!overwrite && manifestMode && baseVersion.isDefined) {
       val v = mergeKey match {
         case Some(key) =>
@@ -800,8 +762,7 @@ class GraftSnapshotTable(tableName: String,
       // O(matched): positions of the doomed rows land as a DV part;
       // no data file is rewritten, no version is published.
       Warehouse.deleteWhere(spark, root, pred, tableSchema)
-    } else if (baseVersion.exists(v => Warehouse.manifestOf(
-        GraftTables.fs(spark, root), root, v).isDefined)) {
+    } else if (baseVersion.exists(Warehouse.snapshot(spark, root, _).isManifest)) {
       // MANIFEST MODE: file-granular delete — only files containing
       // matches are rewritten; None (no match) publishes no version
       Warehouse.deleteWhereFiles(spark, root, pred).foreach(v =>

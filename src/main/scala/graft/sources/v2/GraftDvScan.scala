@@ -95,10 +95,9 @@ case class GraftDvInputPartition(filePath: String, length: Long,
     modificationTime: Long, deletedPositions: Array[Long],
     partitionValues: Array[Any]) extends InputPartition
 
-class GraftDvScanBuilder(spark: SparkSession, root: String, version: Long,
+class GraftDvScanBuilder(spark: SparkSession, snap: Warehouse.Snapshot,
     dataDir: String, tableSchema: StructType, partSchema: StructType,
-    mapping: Map[String, String] = Map.empty,
-    explicitFiles: Option[Seq[(String, Long, Long)]] = None)
+    mapping: Map[String, String] = Map.empty)
     extends ScanBuilder with SupportsPushDownRequiredColumns {
 
   private var required: StructType = tableSchema
@@ -107,20 +106,22 @@ class GraftDvScanBuilder(spark: SparkSession, root: String, version: Long,
     required = requiredSchema
 
   override def build(): Scan =
-    new GraftDvScanImpl(spark, root, version, dataDir, tableSchema,
-      required, partSchema, mapping, explicitFiles)
+    new GraftDvScanImpl(spark, snap, dataDir, tableSchema, required,
+      partSchema, mapping)
 }
 
-class GraftDvScanImpl(spark: SparkSession, private val root: String,
-    private val version: Long, private val dataDir: String,
-    tableSchema: StructType, required: StructType,
-    partSchema: StructType, private val mapping: Map[String, String],
-    // a MANIFEST version's persisted (path, size, mtime) entries:
-    // its files span version dirs, so the recursive dataDir listing
-    // below cannot find them (and must not — the manifest IS the
-    // listing); dataDir is then the table ROOT (DV keys root-relative)
-    private val explicitFiles: Option[Seq[(String, Long, Long)]] = None)
+/** `dataDir` is the prefix DV keys and partition fragments are
+  * relative to: a plain version's (clone-resolved) data dir, or the
+  * table ROOT for a manifest version (its files span version dirs;
+  * keys are root-relative). */
+class GraftDvScanImpl(spark: SparkSession, snap: Warehouse.Snapshot,
+    private val dataDir: String, tableSchema: StructType,
+    required: StructType, partSchema: StructType,
+    private val mapping: Map[String, String])
     extends Scan with Batch {
+
+  private val root = snap.root
+  private val version = snap.version
 
   // a version carrying BOTH deletion vectors and a rename map: the
   // reader runs under PHYSICAL names (the files'), the reported
@@ -157,8 +158,7 @@ class GraftDvScanImpl(spark: SparkSession, private val root: String,
   override def hashCode(): Int = (root, version, readSchema()).hashCode()
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val fs = GraftTables.fs(spark, root)
-    val dvBytes = Warehouse.dvOnDiskBytes(spark, root, version)
+    val dvBytes = snap.dvBytes
     require(dvBytes <= GraftDvScan.MaxDvBytes,
       s"graft: snapshot v$version of $root carries $dvBytes bytes of deletion" +
         s" vectors, past the ${GraftDvScan.MaxDvBytes}-byte scan-planning bound —" +
@@ -167,41 +167,19 @@ class GraftDvScanImpl(spark: SparkSession, private val root: String,
     // Deleted ordinals per data-file NAME (unique within a snapshot —
     // the key deleteWhere records), sorted for the two-pointer skip.
     val deleted: Map[String, Array[Long]] =
-      Warehouse.dvRows(spark, root, version) match {
+      snap.dvFrame match {
         case None => Map.empty
         case Some(dv) => dv.collect()
           .groupBy(_.getString(0))
           .map { case (f, rows) => f -> rows.map(_.getLong(1)).sorted }
       }
-    // Hidden-path rule (the builtin InMemoryFileIndex convention): any
-    // `_`- or `.`-prefixed segment RELATIVE to the data dir excludes
-    // the file — a `_zonemap` sidecar's part files are parquet too,
-    // and serving them as data would surface null-filled index rows.
-    val dataDirQ = fs.makeQualified(new Path(dataDir)).toString.stripSuffix("/")
-    def hidden(p: Path): Boolean = {
-      val abs = fs.makeQualified(p).toString
-      abs.startsWith(dataDirQ + "/") &&
-        abs.stripPrefix(dataDirQ + "/").split("/")
-          .exists(seg => seg.startsWith("_") || seg.startsWith("."))
-    }
-    val files: Seq[(Path, Long, Long)] = explicitFiles match {
-      case Some(entries) =>
-        // manifest version: the persisted entries ARE the listing
-        entries.map { case (abs, len, mtime) => (new Path(abs), len, mtime) }
-      case None =>
-        val it = fs.listFiles(new Path(dataDir), true)
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[(Path, Long, Long)]
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.isFile && s.getPath.getName.endsWith(".parquet") &&
-            !hidden(s.getPath))
-            buf += ((s.getPath, s.getLen, s.getModificationTime))
-        }
-        buf.toSeq
-    }
+    // the snapshot's own file list: a manifest version's persisted
+    // entries, a plain version's one hidden-aware listing (a
+    // `_zonemap` sidecar's part files are parquet too, and serving
+    // them as data would surface null-filled index rows)
+    val files = snap.files.map(e => (new Path(e.path), e.size, e.mtime))
     // The DV key is the URL-ENCODED path relative to the data dir
-    // (matching snapshotWithPos' `_metadata.file_path` strip exactly):
+    // (matching Warehouse.withPos' `_metadata.file_path` strip exactly):
     // a hive-partitioned write REUSES part-file names across partition
     // dirs, so a name-only key would alias rows of different
     // partitions.

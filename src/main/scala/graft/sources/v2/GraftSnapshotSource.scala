@@ -77,21 +77,17 @@ class GraftSnapshotSource(spark: SparkSession, root: String,
     * genuine era break (loud, with a remediation that works); a
     * missing column with no unclaimed counterpart is declared
     * ADD-COLUMNS widening, whose null-fill is the contract. */
-  private def snap(v: Long): DataFrame = {
+  private def snap(s: Warehouse.Snapshot): DataFrame = {
     import org.apache.spark.sql.functions.col
-    require(Warehouse.dvRows(spark, root, v).isEmpty,
+    val v = s.version
+    require(s.dvParts.isEmpty,
       s"graft: snapshot v$v of $root carries deletion vectors — its content" +
         " can change in place, which an append-only snapshot stream cannot" +
         " represent; use the change feed (TBLPROPERTIES('changeFeed'='true'))")
-    val t = Warehouse.eraTranslation(spark, root, v, math.max(v, pinnedEra),
-      schema.fieldNames.toSeq)
+    val t = s.eraL2P(math.max(v, pinnedEra), schema.fieldNames.toSeq)
     val phys = StructType(schema.fields.map(f =>
       f.copy(name = t.getOrElse(f.name, f.name))))
-    val onDisk = Warehouse.readVersionRaw(spark, root, v)
-      .schema.fieldNames.toSet
-    val missing = phys.fieldNames.filterNot(onDisk.contains)
-    val extra = onDisk -- phys.fieldNames
-    if (missing.nonEmpty && extra.nonEmpty)
+    s.eraBreak(phys.fieldNames.toSeq).foreach { case (missing, extra) =>
       throw new IllegalStateException(
         s"graft: snapshot v$v of $root carries column(s)" +
           s" ${extra.mkString(", ")} where the stream's pinned schema" +
@@ -99,7 +95,9 @@ class GraftSnapshotSource(spark: SparkSession, root: String,
           " column-renamed across this stream's era; restart with a" +
           " FRESH checkpoint to adopt the renamed schema, or use the" +
           " change feed")
-    val df = Warehouse.readVersion(spark, root, v, phys)
+    }
+    s.requireComplete("readVersion")
+    val df = s.frame(phys)
     if (t.isEmpty) df
     else df.select(schema.fieldNames.toSeq.map(n =>
       col(s"`${t.getOrElse(n, n)}`").as(n)): _*)
@@ -109,7 +107,7 @@ class GraftSnapshotSource(spark: SparkSession, root: String,
     Warehouse.currentVersion(spark, root).map(LongOffset(_))
 
   override def getBatch(start: Option[V1Offset], end: V1Offset): DataFrame = {
-    val to = ver(end)
+    val to = Warehouse.snapshot(spark, root, ver(end))
     val toDf = snap(to)
     // first batch: the full table as of stream start, or — with
     // `startingVersion` — only what was appended AFTER that version
@@ -118,27 +116,28 @@ class GraftSnapshotSource(spark: SparkSession, root: String,
       if (startingVersion > 0) Some(startingVersion - 1) else None)
     val batch = from match {
       case None => toDf
-      case Some(f) if f == to =>
+      case Some(f) if f == to.version =>
         toDf.limit(0)
-      case Some(f) if Warehouse.dataPath(spark, root, f) ==
-          Warehouse.dataPath(spark, root, to) =>
-        // METADATA-ONLY span (rename/clone pointers over the same data
-        // dir): nothing was appended by construction — and reading the
-        // FROM side may be impossible for a restarted stream whose
-        // pinned schema postdates a rename in the span
-        toDf.limit(0)
-      case Some(f) =>
-        manifestDelta(f, to).getOrElse {
-          val fromDf = snap(f)
-          val rewritten = fromDf.exceptAll(toDf)
-          if (!rewritten.isEmpty)
-            throw new IllegalStateException(
-              s"graft: transition v$f -> v$to of $root rewrote or deleted rows;" +
-                " an append-only snapshot stream cannot represent it — declare" +
-                " TBLPROPERTIES('changeFeed'='true') and stream with" +
-                " option(\"readChangeFeed\", true) instead")
-          toDf.exceptAll(fromDf)
-        }
+      case Some(f) => Warehouse.snapshot(spark, root, f) match {
+        case prev if prev.dataDir == to.dataDir =>
+          // METADATA-ONLY span (rename/clone pointers over the same
+          // data dir): nothing was appended by construction — and
+          // reading the FROM side may be impossible for a restarted
+          // stream whose pinned schema postdates a rename in the span
+          toDf.limit(0)
+        case prev =>
+          manifestDelta(prev, to).getOrElse {
+            val fromDf = snap(prev)
+            val rewritten = fromDf.exceptAll(toDf)
+            if (!rewritten.isEmpty)
+              throw new IllegalStateException(
+                s"graft: transition v$f -> v${to.version} of $root rewrote or" +
+                  " deleted rows; an append-only snapshot stream cannot" +
+                  " represent it — declare TBLPROPERTIES('changeFeed'='true')" +
+                  " and stream with option(\"readChangeFeed\", true) instead")
+            toDf.exceptAll(fromDf)
+          }
+      }
     }
     // V1 contract: the engine asserts the returned plan is streaming
     Bridge.asStreamBatch(batch)
@@ -152,10 +151,10 @@ class GraftSnapshotSource(spark: SparkSession, root: String,
     * diff). The batch reads ONLY the new files through the
     * manifest-backed index — zero listing, zero snapshot scan —
     * era-translated exactly like [[snap]]. None = not applicable. */
-  private def manifestDelta(f: Long, to: Long): Option[DataFrame] = {
+  private def manifestDelta(f: Warehouse.Snapshot,
+      to: Warehouse.Snapshot): Option[DataFrame] = {
     import org.apache.spark.sql.functions.col
-    val fs = GraftTables.fs(spark, root)
-    (Warehouse.manifestOf(fs, root, f), Warehouse.manifestOf(fs, root, to)) match {
+    (f.manifest, to.manifest) match {
       case (Some(fl), Some(tl)) =>
         val fromPaths = fl.map(_.split("\t", 2).head).toSet
         val toPaths = tl.map(_.split("\t", 2).head).toSet
@@ -164,18 +163,16 @@ class GraftSnapshotSource(spark: SparkSession, root: String,
           // DVs can attach to manifest versions too (round 13): an
           // in-place delete mutates content an append-only stream
           // cannot represent — same refusal as snap()'s
-          require(Warehouse.dvRows(spark, root, to).isEmpty &&
-            Warehouse.dvRows(spark, root, f).isEmpty,
-            s"graft: manifest span v$f -> v$to of $root carries deletion" +
-              " vectors — its content can change in place, which an" +
-              " append-only snapshot stream cannot represent; use the" +
-              " change feed (TBLPROPERTIES('changeFeed'='true'))")
-          val t = Warehouse.eraTranslation(spark, root, to,
-            math.max(to, pinnedEra), schema.fieldNames.toSeq)
+          require(to.dvParts.isEmpty && f.dvParts.isEmpty,
+            s"graft: manifest span v${f.version} -> v${to.version} of $root" +
+              " carries deletion vectors — its content can change in place," +
+              " which an append-only snapshot stream cannot represent; use" +
+              " the change feed (TBLPROPERTIES('changeFeed'='true'))")
+          val t = to.eraL2P(math.max(to.version, pinnedEra), schema.fieldNames.toSeq)
           val phys = StructType(schema.fields.map(fd =>
             fd.copy(name = t.getOrElse(fd.name, fd.name))))
           val newRel = toPaths -- fromPaths
-          val df0 = Warehouse.readManifestFiles(spark, root, to, newRel, phys)
+          val df0 = to.filesFrame(newRel, phys)
           GraftSnapshotSource.deltaBatches.increment()
           GraftSnapshotSource.deltaFilesRead.add(newRel.size)
           if (t.isEmpty) df0

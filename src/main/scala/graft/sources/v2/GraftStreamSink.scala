@@ -64,12 +64,7 @@ class GraftStreamSink(spark: SparkSession, root: String,
     Warehouse.versions(spark, root).sorted.reverseIterator
       .map(v => new Path(Warehouse.versionPath(root, v), markerName))
       .find(fs.exists)
-      .map { p =>
-        val in = fs.open(p)
-        try new String(org.apache.hadoop.io.IOUtils.readFullyToByteArray(in),
-          java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-        finally in.close()
-      }
+      .map(p => graft.pipeline.Ingest.readText(fs, p).trim.toLong)
   }
 
   override def addBatch(batchId: Long, data: DataFrame): Unit = synchronized {
@@ -90,10 +85,9 @@ class GraftStreamSink(spark: SparkSession, root: String,
     // publishes in the same atomic rename (no marker-vs-data crash
     // window, exactly like the copy-on-write path below). Complete
     // mode keeps the replace semantics (the batch IS the table).
-    val fs0 = GraftTables.fs(spark, root)
-    val manifestMode = base.exists(v =>
-      Warehouse.manifestOf(fs0, root, v).isDefined) ||
-      GraftCatalog.readProps(spark, root).get("commitMode").contains("manifest")
+    val manifestMode =
+      base.exists(Warehouse.snapshot(spark, root, _).isManifest) ||
+        GraftCatalog.readProps(spark, root).get("commitMode").contains("manifest")
     if (manifestMode && base.isDefined && outputMode != OutputMode.Complete()) {
       val marker = Some(markerName -> batchId.toString)
       val v = mergeKey match {

@@ -270,4 +270,19 @@ class DeletionVectorSpec extends AnyFunSuite {
     assert(anti.exists(_.toLowerCase.contains("anti")),
       s"expected a broadcast LeftAnti join applying the DV, got: $anti")
   }
+
+  test("an in-flight DV staging dir is not a deletion vector to the connector") {
+    // a running (or crashed) deleteWhere leaves `_dv/v<N>/.stage_d_*`
+    // until its rename or a vacuum: no COMPLETE part exists, so the
+    // SQL read must keep the builtin parquet scan (zone maps, DPP)
+    val root = freshRoot()
+    Warehouse.commit(spark, root, batch(12))
+    assert(hfs(root).mkdirs(new Path(Warehouse.dvPath(root, 0L), ".stage_d_x")))
+    val sql = spark.read.format("graft").load(root)
+    val plan = sql.queryExecution.executedPlan.toString
+    assert(!plan.contains("graft-dv"), s"staging dir read as a DV scan:\n$plan")
+    val want = Warehouse.read(spark, root)
+    assert(sql.select(want.columns.map(col): _*).collect().map(_.toString).sorted ===
+      want.collect().map(_.toString).sorted)
+  }
 }

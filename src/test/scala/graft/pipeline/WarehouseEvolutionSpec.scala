@@ -91,4 +91,49 @@ class WarehouseEvolutionSpec extends AnyFunSuite {
     assert(certified.intersect(batch3Keys).isEmpty,
       "late old-schema rows must not retain the overwritten batch's value")
   }
+
+  /** `f`'s result and the Spark jobs it started, counted by a local
+    * property only this call sets: suites share one session and run
+    * concurrently, so a session-wide count would include theirs. A
+    * marker job after `f` drains the (ordered) listener bus. */
+  private def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => seen.incrementAndGet()
+          case t if t == s"$tag-marker" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try f finally sc.setLocalProperty(key, s"$tag-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      assert(drained.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      (out, seen.get())
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a live time-travel read infers a plain version's schema once; compact reuses it") {
+    val root = Files.createTempDirectory("wh_evo_jobs").toString
+    Warehouse.commit(spark, root, batch(41, n = 30).repartition(3))
+    // planning the live read: ONE footer-inference job, shared by the
+    // rename-era guard and the logical schema
+    val (live, planJobs) = jobsOf(Warehouse.readVersionLive(spark, root, 0L))
+    assert(planJobs === 1)
+    assert(live.count() === 30)
+    // compact = that one inference + the repartition's shuffle stage
+    // + the write
+    val (v, compactJobs) = jobsOf(Warehouse.compact(spark, root))
+    assert(v === Some(1L))
+    assert(compactJobs === 3)
+    assert(Warehouse.read(spark, root).count() === 30)
+  }
 }
