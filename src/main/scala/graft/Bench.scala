@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     // Stdout hygiene: the driver parses bench stdout for the one-line
@@ -15,28 +14,7 @@ object Bench {
     try {
       val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // full extension stack — same session shape Verify grades
-        .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-        // Cached plans keep their exact output partitioning unless this
-        // is on; without it every CacheScope-sealed result pins the full
-        // pre-coalesce shuffle width onto all downstream consumers.
-        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        // A long-lived session on a generously-heaped JVM garbage-
-        // collects rarely, and the ContextCleaner (weak-reference
-        // driven) then never reclaims accumulated broadcast/shuffle
-        // state — measured: the END of each bench pass degraded 2×
-        // (w01 14.6→25.3 s) once the heap stopped forcing GCs. One
-        // periodic GC per minute keeps the cleaner live; paired with
-        // -XX:+ExplicitGCInvokesConcurrent (build.sbt) so the call is
-        // a concurrent cycle, not a stop-the-world pause.
-        .config("spark.cleaner.periodicGC.interval", "1min")
-        .getOrCreate()
+      val spark = graft.core.GraftSession.builder(cpus.toInt).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       // Warm the session (codegen, parquet footer cache, JIT) so the
       // first timed query doesn't absorb ~5s of one-time startup.

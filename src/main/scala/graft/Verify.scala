@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,23 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the engine's full extension stack (graft_* functions + TVFs,
-      // TopK strategy, key-filter-through-top-k optimizer rule) —
-      // the optimizer rule needs the extensions path to interleave
-      // with the builtin pushdown batch
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // Cached plans keep their exact output partitioning unless this
-      // is on; without it every CacheScope-sealed result pins the full
-      // pre-coalesce shuffle width onto all downstream consumers.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // keep the ContextCleaner live on a big-heap JVM (see Bench)
-      .config("spark.cleaner.periodicGC.interval", "1min")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder(cpus.toInt).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration aid only (driver never sets it): restrict the

@@ -14,9 +14,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   *
   * Two registration paths, same builders:
   *  - [[GraftExtensions]] via
-  *    `SparkSession.builder.withExtensions(new GraftExtensions)` or
-  *    `spark.sql.extensions=graft.functions.GraftExtensions` — the
-  *    standard plug-in mechanism for a cluster deployment;
+  *    `spark.sql.extensions=graft.functions.GraftExtensions` (set by
+  *    [[graft.core.GraftSession]]) or a builder's
+  *    `withExtensions(new GraftExtensions)` — the standard plug-in
+  *    mechanism for a cluster deployment;
   *  - [[GraftFunctions.register]] on a live session — convenient for
   *    notebooks/tests.
   */

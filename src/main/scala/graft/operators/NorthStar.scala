@@ -105,10 +105,6 @@ object NorthStar {
   def plantedDocsForScratch(spark: SparkSession, dir: String): DataFrame =
     withPlantedNearDups(spark, dir)
 
-  /** Scratch/profiling access to the planted-vector corpus. */
-  def plantedVectorsForScratch(spark: SparkSession, dir: String): DataFrame =
-    withPlantedNearDupVectors(spark, dir)
-
   // ------------------------------------------------------------- dedup
 
   /** Exact dedup groups over raw documents (DuckDB-oracle-checked);

@@ -31,6 +31,26 @@ object CocoaStream {
   final class SimulatedCrash extends RuntimeException(
     "simulated crash after warehouse commit, before checkpoint commit")
 
+  /** The landing-CSV file stream every drain reads.
+    *
+    * enforceSchema=false: the streaming file source has no per-file
+    * quarantine hook (unlike batch Ingest.validateHeaders), so a file
+    * whose header doesn't match the declared schema must fail LOUDLY
+    * rather than bind positionally and merge shifted garbage that the
+    * checkpoint log then marks as processed forever. Landing zones
+    * feeding this variant are expected well-formed; mixed-quality
+    * zones should run the batch pipeline. */
+  private def landingStream(spark: SparkSession, landingDir: String,
+      maxFilesPerTrigger: Option[Int]): org.apache.spark.sql.DataFrame = {
+    val reader = spark.readStream
+      .schema(CocoaSchema.input)
+      .option("header", "true")
+      .option("enforceSchema", "false")
+      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]")
+    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
+    reader.csv(landingDir)
+  }
+
   /** Run one drain of the landing zone into the warehouse. Returns the
     * number of micro-batches processed. `processedAt` pins the audit
     * stamp for every micro-batch of this drain (tests / oracle-checked
@@ -42,23 +62,8 @@ object CocoaStream {
       processedAt: Option[Timestamp] = None,
       crashAfterBatches: Option[Long] = None): Long = {
 
-    // enforceSchema=false: the streaming file source has no per-file
-    // quarantine hook (unlike batch Ingest.validateHeaders), so a file
-    // whose header doesn't match the declared schema must fail LOUDLY
-    // rather than bind positionally and merge shifted garbage that the
-    // checkpoint log then marks as processed forever. Landing zones
-    // feeding this variant are expected well-formed; mixed-quality
-    // zones should run the batch pipeline.
-    val reader = spark.readStream
-      .schema(CocoaSchema.input)
-      .option("header", "true")
-      .option("enforceSchema", "false")
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.csv(landingDir)
-
     var batches = 0L
-    val query = stream.writeStream
+    val query = landingStream(spark, landingDir, maxFilesPerTrigger).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
@@ -92,13 +97,7 @@ object CocoaStream {
   def runAvailableNowSink(spark: SparkSession, landingDir: String,
       warehouseDir: String, checkpointDir: String,
       processedAt: Option[Timestamp] = None): Unit = {
-    val stream = spark.readStream
-      .schema(CocoaSchema.input)
-      .option("header", "true")
-      .option("enforceSchema", "false")
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]")
-      .csv(landingDir)
-    val enriched = Enrich.enrich(stream,
+    val enriched = Enrich.enrich(landingStream(spark, landingDir, None),
       processedAt.getOrElse(new Timestamp(System.currentTimeMillis())))
     val query = enriched.writeStream
       .format("graft")
@@ -127,16 +126,8 @@ object CocoaStream {
       processedAt: Option[Timestamp] = None): Long = {
     graft.pipeline.JdbcWarehouse.ensureTable(
       url, table, CocoaSchema.warehouse, CocoaSchema.mergeKey, dialect)
-    val reader = spark.readStream
-      .schema(CocoaSchema.input)
-      .option("header", "true")
-      .option("enforceSchema", "false")
-      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss[.SSSSSS]")
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n))
-    val stream = reader.csv(landingDir)
-
     var batches = 0L
-    val query = stream.writeStream
+    val query = landingStream(spark, landingDir, maxFilesPerTrigger).writeStream
       .trigger(Trigger.AvailableNow())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>

@@ -107,4 +107,9 @@ object Bridge {
       org.apache.spark.sql.execution.LogicalRDD(
         qe.analyzed.output, qe.toRdd, isStreaming = true)(session))
   }
+
+  /** Block until the listener bus has delivered every posted event, so
+    * a listener's counters are complete once an action returns. */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -31,6 +31,16 @@ class EntrySpec extends AnyFunSuite {
         s"certificate pattern covers approximate ops too): $unoracled")
   }
 
+  test("resetMemos drops the s19 pipeline run: the next run lands a fresh warehouse") {
+    val s19 = SparkEntry.queries("s19_stream_sink")
+    val first = s19(spark, "/root/testdata/sf0.001")
+    SparkEntry.resetMemos()
+    val second = s19(spark, "/root/testdata/sf0.001")
+    assert(first.inputFiles.nonEmpty && second.inputFiles.nonEmpty)
+    assert(first.inputFiles.toSet.intersect(second.inputFiles.toSet).isEmpty,
+      "s19 served its memoized warehouse after resetMemos")
+  }
+
   test("query names are stable and well-formed") {
     assert(SparkEntry.queries.keys.forall(_.matches("[a-z][a-z0-9_]+")))
     assert(SparkEntry.queries.size >= 70)

@@ -3,11 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM (suites share it;
-  * Test / fork := true gives the JVM the required add-opens). */
+  * Test / fork := true gives the JVM the required add-opens). Built
+  * through [[graft.core.GraftSession]], so the suites plan with the
+  * conf the gate runs; only the deployment settings below are added. */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
+    val s = graft.core.GraftSession.builder(4)
       .appName("graft-tests")
       // FAIR job scheduling: suites share this session and run
       // CONCURRENTLY, and under the default FIFO a tiny job (e.g. the
@@ -18,13 +19,8 @@ object SparkTestSession {
       // share of the 4 cores; results are value-deterministic either
       // way, scheduling order never decides an assertion.
       .config("spark.scheduler.mode", "FAIR")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .config("spark.ui.enabled", "false")
-      // same extension stack the Verify/Bench sessions run with
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
