@@ -11,9 +11,9 @@ import org.apache.spark.sql.execution.ui.{SparkListenerSQLExecutionEnd, SparkLis
 import org.apache.spark.sql.graftbridge.Bridge
 
 /** Dev profiling main on the harness session ([[graft.core.GraftSession]]):
-  * per-query wall time and job count over N rounds, and — given a plan
-  * dir — each query's formatted plan plus its executed WholeStageCodegen
-  * subtrees. Not part of the library surface. Usage:
+  * per-query wall time and job count of a collect over N rounds, and —
+  * given a plan dir — each query's formatted plan plus its executed
+  * WholeStageCodegen subtrees. Not part of the library surface. Usage:
   * `sbt "runMain graft.Profile [--plans <outDir> <suffix>] [query...]"`
   * (no query: the whole registry), writing `<outDir>/<query>_<suffix>.txt`.
   * Env: `SPARK_GRAFT_SF_DIR` (default /root/testdata/sf0.1),
@@ -56,7 +56,9 @@ object Profile {
       val timings = for (round <- 1 to rounds; name <- todo) yield {
         val j0 = jobs.get()
         val t0 = System.nanoTime()
-        val rows = all(name)(spark, sfDir).count()
+        // collect, not count(): a count lets the optimizer drop the
+        // row's ORDER BY (and any other order-only work) from the plan
+        val rows = all(name)(spark, sfDir).collect().length.toLong
         val dt = (System.nanoTime() - t0) / 1e9
         Bridge.drainListeners(sc)
         val t = Timing(name, round, dt, jobs.get() - j0, rows)

@@ -2047,33 +2047,41 @@ object SparkEntry {
     spark.sql("SELECT * FROM graft_wh.cocoa_evo ORDER BY shipment_id")
   }
 
-  /** Catalog root for the SQL-native gates: `base/cocoa` holds v0 =
-    * the memoized run's batch-1 snapshot and v1 = the full warehouse,
-    * and the session conf registers [[graft.sources.v2.GraftCatalog]]
-    * under `graft_wh` BEFORE its first resolution (the catalog
-    * manager caches instances per session). One-time per session.
-    * Deliberately NOT a [[Memo]]: the session's catalog manager keeps
-    * the `GraftCatalog` instance it built together with that `base`,
-    * so a reset that rebuilt the root under a new base would leave the
-    * session resolving `graft_wh` against the old one. */
-  private val cocoaCatalogMemo =
+  /** Per-session root of the SQL-native gates' `graft_wh` catalog
+    * ([[graft.sources.v2.GraftCatalog]]), registered in the session conf
+    * before its first resolution. Deliberately NOT a [[Memo]]: the
+    * session's catalog manager caches the `GraftCatalog` it built with
+    * this base, so a reset re-fills the same base instead of
+    * re-pointing the session. */
+  private val cocoaCatalogBases =
     new java.util.concurrent.ConcurrentHashMap[SparkSession, String]()
 
+  /** The catalog's contents, per session: `base/cocoa` holds v0 = the
+    * memoized run's batch-1 snapshot and v1 = the full warehouse. A
+    * reset deletes every table under the base (`cocoa` and the p24-p28
+    * tables), so the next gate re-commits them from a fresh run. */
+  private val cocoaCatalogMemo = new Memo[SparkSession, String](base =>
+    Option(new java.io.File(base).listFiles()).toSeq.flatten
+      .foreach(t => graft.core.RunTemp.deleteRecursively(t.toPath)))
+
   private def cocoaCatalogBase(spark: SparkSession): String =
-    cocoaCatalogMemo.computeIfAbsent(spark, { s =>
+    cocoaCatalogMemo(spark) { s =>
+      val base = cocoaCatalogBases.computeIfAbsent(s, { s =>
+        val b = graft.core.RunTemp.dir("graft_sqlcat_", keep = 4)
+        s.conf.set("spark.sql.catalog.graft_wh", "graft.sources.v2.GraftCatalog")
+        s.conf.set("spark.sql.catalog.graft_wh.base", b)
+        b
+      })
       cocoaWarehouse(s)
       val dirs = cocoaDirsMemo.get(s)
-      val base = graft.core.RunTemp.dir("graft_sqlcat_", keep = 4)
       val root = s"$base/cocoa"
       val scoped = pipelineSession(s)
       val v0 = s.read.schema(graft.pipeline.CocoaSchema.warehouse)
         .parquet(Warehouse.versionPath(dirs.warehouse, 0L))
       Warehouse.commit(scoped, root, v0)
       Warehouse.commit(scoped, root, Warehouse.read(s, dirs.warehouse))
-      s.conf.set("spark.sql.catalog.graft_wh", "graft.sources.v2.GraftCatalog")
-      s.conf.set("spark.sql.catalog.graft_wh.base", base)
       base
-    })
+    }
 
   /** io13: NATIVE SQL time travel — `VERSION AS OF` resolved through
     * [[graft.sources.v2.GraftCatalog]] (Spark's own syntax routed to

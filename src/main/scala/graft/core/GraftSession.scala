@@ -15,9 +15,9 @@ object GraftSession {
     "spark.sql.session.timeZone" -> "UTC",
     "spark.ui.enabled" -> "false",
     // the engine's full extension stack (graft_* functions + TVFs,
-    // TopK strategy, key-filter-through-top-k optimizer rule) — the
-    // optimizer rule needs the extensions path to interleave with the
-    // builtin pushdown batch
+    // TopK strategy, key-filter-through-top-k optimizer rule, the
+    // SmallSort AQE rule) — the optimizer rule needs the extensions
+    // path to interleave with the builtin pushdown batch
     "spark.sql.extensions" -> "graft.functions.GraftExtensions",
     // Cached plans keep their exact output partitioning unless this is
     // on; without it every CacheScope-sealed result pins the full

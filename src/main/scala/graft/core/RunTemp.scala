@@ -75,7 +75,7 @@ object RunTemp {
     target.foreach(deleteRecursively)
   }
 
-  private def deleteRecursively(root: Path): Unit =
+  private[graft] def deleteRecursively(root: Path): Unit =
     if (Files.exists(root)) {
       val s = Files.walk(root)
       try s.sorted(java.util.Comparator.reverseOrder())

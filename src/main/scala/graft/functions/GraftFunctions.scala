@@ -132,10 +132,16 @@ object GraftFunctions {
 }
 
 /** `SparkSessionExtensions` plug-in: injects every `graft_*` function
-  * and the engine's custom planner strategy at session build time
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`). The only
-  * custom strategy is top-k-per-key ([[graft.plans.TopKStrategy]]) —
-  * everything else is expressions + built-in planning (SURVEY.md §4). */
+  * and the engine's custom planning at session build time
+  * (`spark.sql.extensions=graft.functions.GraftExtensions`). Custom
+  * planning is two pieces, everything else is expressions + built-in
+  * planning (SURVEY.md §4):
+  *  - top-k-per-key ([[graft.plans.TopKStrategy]] and its key-filter
+  *    pushdown);
+  *  - [[graft.plans.SmallSort]], an AQE runtime rule: once a global
+  *    `ORDER BY`'s input stages have run and its input fits in the one
+  *    partition AQE would coalesce it to, the sort runs in one task
+  *    with no range-sampling job and no range shuffle. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftFunctions.registrations.foreach { case (name, usage, builder) =>
@@ -149,5 +155,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // operator-optimization batch so the builtin PushDownPredicates
     // keeps cascading the moved filter (through joins, into scans)
     ext.injectOptimizerRule(_ => graft.plans.PushFilterThroughTopK)
+    ext.injectRuntimeOptimizerRule(_ => graft.plans.SmallSort)
   }
 }

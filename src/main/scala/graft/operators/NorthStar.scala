@@ -101,10 +101,6 @@ object NorthStar {
     }
   }
 
-  /** Scratch/profiling access to the planted-dup corpus. */
-  def plantedDocsForScratch(spark: SparkSession, dir: String): DataFrame =
-    withPlantedNearDups(spark, dir)
-
   // ------------------------------------------------------------- dedup
 
   /** Exact dedup groups over raw documents (DuckDB-oracle-checked);

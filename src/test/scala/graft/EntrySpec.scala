@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver's own smoke contract: entry() returns rows, every
@@ -39,6 +41,30 @@ class EntrySpec extends AnyFunSuite {
     assert(first.inputFiles.nonEmpty && second.inputFiles.nonEmpty)
     assert(first.inputFiles.toSet.intersect(second.inputFiles.toSet).isEmpty,
       "s19 served its memoized warehouse after resetMemos")
+  }
+
+  test("resetMemos drops the io13 catalog tables: the next run re-commits them") {
+    val io13 = SparkEntry.queries("io13_sql_time_travel")
+    val firstRows = io13(spark, "/root/testdata/sf0.001").collect().toSeq
+    // the catalog's committed data files (its scan reports no inputFiles)
+    def committed(): Set[String] = {
+      val root = java.nio.file.Paths.get(spark.conf.get("spark.sql.catalog.graft_wh.base"), "cocoa")
+      if (!java.nio.file.Files.exists(root)) Set.empty
+      else {
+        val s = java.nio.file.Files.walk(root)
+        try s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toSet
+        finally s.close()
+      }
+    }
+    val firstFiles = committed()
+    SparkEntry.resetMemos()
+    assert(firstFiles.nonEmpty && committed().isEmpty,
+      "resetMemos left io13's catalog tables in place")
+    val secondRows = io13(spark, "/root/testdata/sf0.001").collect().toSeq
+    val secondFiles = committed()
+    assert(secondFiles.nonEmpty && firstFiles.intersect(secondFiles).isEmpty,
+      "io13 served its memoized catalog tables after resetMemos")
+    assert(secondRows === firstRows)
   }
 
   test("query names are stable and well-formed") {

@@ -25,4 +25,33 @@ object SparkTestSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
+
+  /** `f`'s result and the Spark jobs it started, counted by a local
+    * property only this call sets: suites share one session and may run
+    * concurrently, so a session-wide count would include theirs. A
+    * marker job after `f` drains the (ordered) listener bus. */
+  def jobsOf[T](f: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val key = "graft.test.jobTag"
+    val tag = java.util.UUID.randomUUID().toString
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(js.properties).map(_.getProperty(key)).orNull match {
+          case `tag` => seen.incrementAndGet()
+          case t if t == s"$tag-marker" => drained.countDown()
+          case _ => ()
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(key, tag)
+      val out = try f finally sc.setLocalProperty(key, s"$tag-marker")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.setLocalProperty(key, null)
+      assert(drained.await(120, java.util.concurrent.TimeUnit.SECONDS))
+      (out, seen.get())
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -149,7 +149,7 @@ class DedupSpec extends AnyFunSuite {
   test("corpus clean: gates, dedups, and never keeps both halves of a near-dup pair") {
     val out = NorthStar.corpusClean(spark, "/root/testdata/sf0.001")
       .select("doc_id").collect().map(_.getLong(0)).toSet
-    val corpusSize = NorthStar.plantedDocsForScratch(spark, "/root/testdata/sf0.001").count()
+    val corpusSize = NorthStar.withPlantedNearDups(spark, "/root/testdata/sf0.001").count()
     assert(out.nonEmpty && out.size < corpusSize, "gate + dedup must drop something")
     // a planted copy (id+100000) and its base must never BOTH survive
     assert(!out.exists(id => id >= 100000L && out.contains(id - 100000L)),
